@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.pipeline.{ForkFreeLocalFileSystem, ForkFreeLocalFs}
+
 /** Central SparkSession factory so Verify / Bench / tests share one
   * config surface.
   *
@@ -29,7 +31,14 @@ import org.apache.spark.sql.SparkSession
   *    nanosecond timestamps, which Spark 4 otherwise rejects
   *    (PARQUET_TYPE_ILLEGAL); reading them as int64-nanos also keeps
   *    recency arithmetic exact and oracle-comparable;
-  *  - UTC session timezone for oracle parity.
+  *  - UTC session timezone for oracle parity;
+  *  - the `file:` scheme through [[graft.pipeline.ForkFreeLocalFs]],
+  *    on both Hadoop client APIs (`FileSystem` for the parquet
+  *    writers and readers, `FileContext` for streaming checkpoints and
+  *    AtomicTable commits). Without libhadoop the stock local file
+  *    system shells out: one `chmod` process per file and directory
+  *    written, one `readlink` per rename — thousands of forks per
+  *    lakehouse increment or streaming drain, all of it fixed cost.
   */
 object Sessions {
   def local(cores: String): SparkSession = {
@@ -48,6 +57,8 @@ object Sessions {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.parquet.compression.codec", "snappy")
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[ForkFreeLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[ForkFreeLocalFs].getName)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
+import graft.operators.Components.LazyCheckpoint
+
 /** EXACT substring-duplication detection via distributed prefix
   * doubling — the suffix-array recipe behind Lee et al. 2022's
   * ExactSubstr, re-expressed as O(log L) keyed shuffle rounds.
@@ -115,7 +117,7 @@ object SuffixDedup {
       val next = relabel(
           paired.select(col(idCol), col("pos"), col("label"), col("label2")),
           Seq("label", "label2"))
-        .localCheckpoint(false)
+        .lazyCheckpoint()
       next.count() // materialize before releasing the parent round
       graft.operators.Components.dropCheckpoint(labels)
       labels = next

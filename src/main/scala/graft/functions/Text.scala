@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.operators.Components.LazyCheckpoint
+
 /** Text-analysis functions for a training-data pipeline, built entirely
   * from codegen'd `org.apache.spark.sql.functions` (no UDFs): language
   * ID (stopword-hit heuristic), quality scoring, token counting
@@ -139,7 +141,7 @@ object Text {
     // blocks are dropped only AFTER the collect that consumed them (the
     // Components labelSum discipline — dropping before the dependent
     // materializes would free blocks a truncated lineage can't rebuild)
-    var toks = docs.select(bpeTokens(col(textCol)).as("t")).localCheckpoint(false)
+    var toks = docs.select(bpeTokens(col(textCol)).as("t")).lazyCheckpoint()
     var prev: DataFrame = null
     val merges = Seq.newBuilder[(Int, String, String, Long)]
     var r = 1
@@ -154,7 +156,7 @@ object Text {
         val Array(a, b) = top(0).getString(0).split(" ", 2)
         merges += ((r, a, b, top(0).getLong(1)))
         prev = toks
-        toks = toks.select(mergePair(col("t"), a, b).as("t")).localCheckpoint(false)
+        toks = toks.select(mergePair(col("t"), a, b).as("t")).lazyCheckpoint()
       }
       r += 1
     }

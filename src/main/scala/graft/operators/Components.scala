@@ -49,9 +49,44 @@ object Components {
     * iteration count on large graphs. The checkpointed plan is a single
     * `LogicalRDD` holding exactly that RDD. */
   private[graft] def dropCheckpoint(df: DataFrame): Unit =
+    checkpointRdd(df).foreach(_.unpersist(blocking = false))
+
+  /** `df.localCheckpoint(false)` whose plan's SQL metrics stay
+    * reachable for as long as the checkpoint's RDD is. The first job
+    * that materializes a lazy checkpoint cuts its lineage when it ends,
+    * and with it the driver's last reference to the plan's metrics; a
+    * second job already running over the same lineage (two broadcast
+    * builds of one relation, the parallel commit writes) still reports
+    * updates for them. Once a GC has collected them, the DAGScheduler
+    * logs `attempted to access non-existent accumulator` with a stack
+    * trace per task and metric, and drops those updates. */
+  private[graft] def lazyCheckpoint(df: DataFrame): DataFrame = {
+    val cp = df.localCheckpoint(false)
+    val metrics = planMetrics(df)
+    checkpointRdd(cp).foreach(metricsOf.put(_, metrics))
+    cp
+  }
+
+  /** Every SQL metric of `df`'s executed plan, adaptive stages included. */
+  private[graft] def planMetrics(df: DataFrame): Seq[AnyRef] =
+    PlanWalk.collectWithSubqueries(df.queryExecution.executedPlan) {
+      case p => p.metrics.values.toSeq
+    }.flatten
+
+  implicit class LazyCheckpoint(private val df: DataFrame) extends AnyVal {
+    def lazyCheckpoint(): DataFrame = Components.lazyCheckpoint(df)
+  }
+
+  private object PlanWalk extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+  /** checkpoint RDD → its plan's metrics; an entry lives as long as its RDD */
+  private val metricsOf = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[org.apache.spark.rdd.RDD[_], Seq[AnyRef]]())
+
+  private def checkpointRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
     df.queryExecution.analyzed.collectFirst {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }.foreach(_.unpersist(blocking = false))
+    }
 
   /** Row cap for the DRIVER union-find fast path: a graph whose
     * MEASURED |V| + |E| is at or below this solves locally in one
@@ -177,7 +212,7 @@ object Components {
       val next = labels.join(neighborMin, Seq("v"), "left")
         .select(col("v"),
           least(col("label"), coalesce(col("nlabel"), col("label"))).as("label"))
-        .localCheckpoint(false)
+        .lazyCheckpoint()
       val s = labelSum(next)
       converged = s.compareTo(prevSum) == 0
       prevSum = s
@@ -300,7 +335,7 @@ object Components {
       // (measured +10 % at sf0.1 in round 8, a wash re-measured in
       // round 9 after the hashed-gram edge build) and would add a
       // block-lifecycle obligation per round.
-      val next = star(star(e, large = true), large = false).localCheckpoint(false)
+      val next = star(star(e, large = true), large = false).lazyCheckpoint()
       val nfp = fingerprint(next)
       stable = nfp == fp && sameEdges(next, e)
       fp = nfp

@@ -6,6 +6,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
+import graft.operators.Components.LazyCheckpoint
+
 /** INCREMENTAL entity resolution — q228's block → match → canonicalize
   * pipeline maintained under customer ARRIVALS without re-matching the
   * accumulated base against itself (the q180 contracted-label
@@ -194,13 +196,14 @@ object IncrementalEr {
     layoutOf(spark, dir)
   }
 
-  /** Parquet read that treats a MISSING directory as an empty relation
-    * of the given schema — a no-op commit (marker, no data) must not
-    * wedge later reads. Only FileNotFound maps to empty: any other
-    * listing/IO failure propagates, because treating a transient error
-    * as an empty table silently corrupts the resolution (duplicates
-    * past the re-observation guard, probes missing all standing
-    * matches). */
+  /** Parquet read under the artifact's own `schema` (no schema
+    * inference job; the batch column stays LONG whatever the ids) that
+    * treats a MISSING directory as an empty relation of that schema — a
+    * no-op commit (marker, no data) must not wedge later reads. Only
+    * FileNotFound maps to empty: any other listing/IO failure
+    * propagates, because treating a transient error as an empty table
+    * silently corrupts the resolution (duplicates past the
+    * re-observation guard, probes missing all standing matches). */
   private def readOrEmpty(spark: SparkSession, dir: String,
                           schema: StructType): DataFrame = {
     val hasData = try {
@@ -211,25 +214,25 @@ object IncrementalEr {
         st.isDirectory || n.endsWith(".parquet")
       }
     } catch { case _: java.io.FileNotFoundException => false }
-    if (hasData) spark.read.parquet(dir)
+    if (hasData) spark.read.schema(schema).parquet(dir)
     else spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
   }
 
-  private val labelsSchema = StructType(Seq(
+  private[graft] val labelsSchema = StructType(Seq(
     StructField("v", LongType), StructField("component", LongType),
     StructField(BatchCol, LongType), StructField("kb", IntegerType)))
 
-  private val membersSchema = StructType(Seq(
+  private[graft] val membersSchema = StructType(Seq(
     StructField("component", LongType), StructField("v", LongType),
     StructField(BatchCol, LongType), StructField("cb", IntegerType)))
 
-  private val baseSchema = StructType(Seq(
-    StructField("blk", LongType), StructField("k", LongType),
-    StructField("w", StringType),
+  private[graft] val baseSchema = StructType(Seq(
+    StructField("k", LongType), StructField("w", StringType),
+    StructField("blk", LongType),
     StructField(BatchCol, LongType), StructField("wb", IntegerType)))
 
-  private val variantsSchema = StructType(Seq(
+  private[graft] val variantsSchema = StructType(Seq(
     StructField("blk", LongType), StructField("k", LongType),
     StructField("w", StringType),
     StructField("g_pos", IntegerType), StructField("g_vh", LongType),
@@ -594,7 +597,7 @@ object IncrementalEr {
     val arrivals0 = batch.select(col("c_custkey").cast("long").as("k"),
       col("c_name").as("w"), col("c_nationkey").cast("long").as("blk"))
       .filter(col("w").isNotNull && col("blk").isNotNull)
-      .dropDuplicates("k").localCheckpoint(false)
+      .dropDuplicates("k").lazyCheckpoint()
     val lay = ensureLayout(spark, dir, last.isDefined)
     // re-observation guard (kb-pruned, key-restricted label read):
     // genuinely-new arrivals only — a re-observed vertex must keep its
@@ -617,7 +620,7 @@ object IncrementalEr {
             bcast = n <= MaxBroadcastArrivals,
             sets = Some((sets(mD), sets(mS))))
             .select(col("v").as("k")), Seq("k"), "left_anti")
-          .localCheckpoint(false)
+          .lazyCheckpoint()
         (n, a)
     }
     mark("arrivals")
@@ -638,7 +641,7 @@ object IncrementalEr {
     // consumed by the probe-hash derivation, the index probe, and the
     // variant-index commit below (lazy: the probe-hash distinct+collect
     // — or, on the first batch, the edge count — materializes it)
-    val dA = dels(arrivals).localCheckpoint(false)
+    val dA = dels(arrivals).lazyCheckpoint()
     // probe hash families: the arrivals' variant hashes meet the
     // variant index (substitutions, arrival-shorter) and the base's
     // string hashes (arrival-longer); the arrivals' own string hashes
@@ -668,7 +671,7 @@ object IncrementalEr {
     // can go now (batch 0 keeps them — arrivals IS arrivals0 there)
     if (arrivals ne arrivals0) Components.dropCheckpoint(arrivals0)
     val newEdges = edgesIndexed(arrivals, standing.map(_._1),
-      standing.map(_._2), bcast, delsA = Some(dA)).localCheckpoint(false)
+      standing.map(_._2), bcast, delsA = Some(dA)).lazyCheckpoint()
     // ONE job (r17 — was an edge-count job plus the standing-label
     // read's own residue collect): materialize the edge checkpoint,
     // count the edges AND derive the endpoints' kb residue sets for
@@ -718,7 +721,7 @@ object IncrementalEr {
           .join(endLabels.select(col("v").as("eb"), col("component").as("lb")), Seq("eb"))
           .filter(col("la") =!= col("lb"))
           .select(col("la").as("a"), col("lb").as("b")).distinct()
-          .localCheckpoint(false)
+          .lazyCheckpoint()
         // ONE bounded take decides the driver fast path AND fetches the
         // contracted edges (r17 — was: count job, CC's own vertex+edge
         // takes, the CC result spill, a merged-count job, and the
@@ -759,7 +762,7 @@ object IncrementalEr {
               val cand = memberRows(spark, dir, up, None, Some(mSets))
                 .join(broadcast(touchedArr.toSeq.toDF("component")),
                   Seq("component"), "left_semi")
-                .select("v").distinct().localCheckpoint(false)
+                .select("v").distinct().lazyCheckpoint()
               lateDrops ::= cand
               // ONE job: candidate count (broadcast cap) + its kb
               // residue sets for the standing-label read (r17)
@@ -779,7 +782,7 @@ object IncrementalEr {
             lateDrops ::= contracted
             // LAZY: the two label-delta commit writes below materialize
             // it — the dedicated read-back job is gone (r17)
-            arrivalRows.unionByName(movedStanding).localCheckpoint(false)
+            arrivalRows.unionByName(movedStanding).lazyCheckpoint()
           case _ =>
             // over-cap contracted graph (or over-cap touched set): the
             // unchanged distributed shape
@@ -804,7 +807,7 @@ object IncrementalEr {
               val cand = memberRows(spark, dir, up,
                   Some(touched.select(xxhash64(col("component")).as("h"))))
                 .join(hT(touched), Seq("component"), "left_semi")
-                .select("v").distinct().localCheckpoint(false)
+                .select("v").distinct().lazyCheckpoint()
               lateDrops ::= cand
               val (lD, lS) = labelModsAt(spark, dir, up, lay)
               val (cm, nCand) =
@@ -820,7 +823,7 @@ object IncrementalEr {
               StructType(labelsSchema.fields.take(2))))
             mark("  moved")
             lateDrops ::= contracted
-            arrivalRows.unionByName(movedStanding).localCheckpoint(false)
+            arrivalRows.unionByName(movedStanding).lazyCheckpoint()
         }
       }
     mark("delta")
@@ -906,7 +909,7 @@ object IncrementalEr {
     // yields the forget-set count (emptiness gate + broadcast caps)
     // AND its kb residue sets for the standing-label locate read.
     val del = ids.select(col(ids.columns.head).cast("long").as("k")).distinct()
-      .localCheckpoint(false)
+      .lazyCheckpoint()
     val (lD, lS) = labelModsAt(spark, dir, last, lay)
     val (delM, nDel) = touchedSetsCount(del, xxhash64(col("k")), Seq(lD, lS))
     if (nDel == 0) {
@@ -921,7 +924,7 @@ object IncrementalEr {
     // read's residue collect): touched-component count (emptiness gate
     // + broadcast caps) AND the cb residue sets for the member read
     val affected = affectedIds.select(col("component")).distinct()
-      .localCheckpoint(false)
+      .lazyCheckpoint()
     val (cD, cS) = memberModsAt(spark, dir, last, lay)
     val (affM, nAffected) =
       touchedSetsCount(affected, xxhash64(col("component")), Seq(cD, cS))
@@ -942,7 +945,7 @@ object IncrementalEr {
     // rewrite unit for the index)
     // lazy: the touched-leaf collect right below materializes it
     val touchedLeafs = base0.join(hDel(del), Seq("k"), "left_semi")
-      .select(col(BatchCol), col("wb")).distinct().localCheckpoint(false)
+      .select(col(BatchCol), col("wb")).distinct().lazyCheckpoint()
     // ONE collect serves the touched-leaf set (emptied-leaf math below)
     // AND the touched BATCH ids, which are bounded by the commit count
     // and pushed as an `isin` on the PARTITION column, so the survivor
@@ -958,10 +961,10 @@ object IncrementalEr {
     // replace (the self-overwrite contract, unchanged)
     val survivors = base0.filter(col(BatchCol).isin(touchedBatchIds: _*))
       .join(hDel(del), Seq("k"), "left_anti")
-      .localCheckpoint(false)
+      .lazyCheckpoint()
     val rewritten = survivors
       .join(broadcast(touchedLeafs), Seq(BatchCol, "wb"), "left_semi")
-      .localCheckpoint(false)
+      .lazyCheckpoint()
     mark("survivors")
     // clusters touching a forgotten id (`affected`, computed with the
     // gate above): relabel their REMAINING members from scratch —
@@ -979,7 +982,7 @@ object IncrementalEr {
     val cand = memberRows(spark, dir, last, None,
         Some((affM(cD), affM(cS))))
       .join(hAff(affected), Seq("component"), "left_semi")
-      .select("v").distinct().localCheckpoint(false)
+      .select("v").distinct().lazyCheckpoint()
     // ONE job: candidate count + kb residue sets for the label read
     val (candM, nCand) = touchedSetsCount(cand, xxhash64(col("v")), Seq(lD, lS))
     val remaining = labelsLatestFor(spark, dir, last, cand,
@@ -988,7 +991,7 @@ object IncrementalEr {
       .join(hAff(affected), Seq("component"), "left_semi")
       .join(hDel(del.select(col("k").as("v"))), Seq("v"), "left_anti")
       .select(col("v"))
-      .localCheckpoint(false)
+      .lazyCheckpoint()
     val nRemaining = remaining.count()
     Components.dropCheckpoint(cand)
     mark("members")
@@ -1000,9 +1003,9 @@ object IncrementalEr {
           broadcast(remaining.select(col("v").as("k")))
         else remaining.select(col("v").as("k")), Seq("k"), "left_semi")
       .join(hDel(del), Seq("k"), "left_anti")
-      .localCheckpoint(false)
+      .lazyCheckpoint()
     val edges = edgesTouching(memRel, memRel,
-      bcast = nRemaining <= MaxBroadcastArrivals).localCheckpoint(false)
+      bcast = nRemaining <= MaxBroadcastArrivals).lazyCheckpoint()
     // ONE count materializes the edge checkpoint (memRel's blocks land
     // inside the same job) and doubles as the former isEmpty probe
     val nEdges = edges.count()
@@ -1039,7 +1042,7 @@ object IncrementalEr {
         when(col(BatchCol) === lit(snapV.map(_._1).getOrElse(Long.MinValue)),
           lit(snapV.map(_._3).getOrElse(lay.variants)))
           .otherwise(lit(lay.variants))).cast("int"))
-      .localCheckpoint(false) // materialized by its leafSet collect below
+      .lazyCheckpoint() // materialized by its leafSet collect below
     // existing variant leafs of the touched batches come from a DRIVER
     // directory listing, not a parquet scan: a leaf IS a partition
     // directory (`_er_batch=<b>/vb=<v>`), writers only materialize

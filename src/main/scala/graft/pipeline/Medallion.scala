@@ -1,7 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.operators.Relational
 
 /** The reference's medallion architecture (bronze → silver → gold)
@@ -60,9 +62,13 @@ object Medallion {
           .withColumn("day", dayofmonth(d))
     }
 
-  /** K1 — partitioned append (bronze_batch_load.py:91-92). Empty-input
-    * short-circuit mirrors `df.rdd.isEmpty()` at :73,118 — in Scala,
-    * `df.isEmpty` (a limit-1 scan, not a full count).
+  /** K1 — partitioned append (bronze_batch_load.py:91-92). Returns the
+    * rows written, observed on the write itself: the reference's
+    * `df.rdd.isEmpty()` short-circuit (:73,118) and its logged count
+    * (:68,135) cost no job of their own. An empty input writes no data
+    * file; the directory the committer lays down for it is removed
+    * again when the sink did not exist before, so an empty full load
+    * leaves no sink behind.
     *
     * The input is REBALANCE-hinted ON the partition columns first so
     * each hive directory receives ONE file per batch instead of one per
@@ -77,10 +83,22 @@ object Medallion {
     * giant file.
     */
   def appendPartitioned(df: DataFrame, path: String,
-                        partitionCols: Seq[String] = Seq("year", "month", "day")): Unit =
-    if (!df.isEmpty)
-      df.hint("rebalance", partitionCols.map(col): _*)
-        .write.partitionBy(partitionCols: _*).mode(SaveMode.Append).parquet(path)
+                        partitionCols: Seq[String] = Seq("year", "month", "day")): Long = {
+    val sink = new Path(path)
+    val fs = sink.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    val existed = fs.exists(sink)
+    val written = Observation()
+    df.observe(written, count(lit(1)).as("rows"))
+      .hint("rebalance", partitionCols.map(col): _*)
+      .write.partitionBy(partitionCols: _*).mode(SaveMode.Append).parquet(path)
+    // an empty write reports no metrics: AQE drops the observed subtree
+    // once its shuffle turns out empty
+    val n = written.get.getOrElse("rows", 0L).asInstanceOf[Long]
+    if (n == 0 && !existed &&
+        fs.listStatus(sink).forall(st => "_.".contains(st.getPath.getName.head)))
+      fs.delete(sink, true)
+    n
+  }
 
   /** Full bronze incremental-load step: probe sink, slice source, derive
     * partitions, append. Returns rows written (for the driver log, as the
@@ -91,16 +109,18 @@ object Medallion {
                             partitionCols: Seq[String] = Seq("year", "month", "day")): Long = {
     // sink absent ⇒ full-load branch. Probed through the FileSystem API
     // (not by catching the reader's exception — Spark 4's lazy analysis
-    // wraps the PATH_NOT_FOUND error unpredictably).
-    val sink = new org.apache.hadoop.fs.Path(sinkPath)
+    // wraps the PATH_NOT_FOUND error unpredictably). The probe reads
+    // the one column it needs under the source's type, which spares
+    // the parquet schema-inference job.
+    val sink = new Path(sinkPath)
     val fs = sink.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val wm: Option[Any] =
-      if (fs.exists(sink)) highWatermark(spark.read.parquet(sinkPath), timeCol) else None
-    val slice = withPartitionColumns(
-      incrementalSlice(source, timeCol, wm), Some(timeCol), processingDate)
-    val n = slice.count()
-    if (n > 0) appendPartitioned(slice, sinkPath, partitionCols)
-    n
+      if (fs.exists(sink)) highWatermark(
+        spark.read.schema(StructType(Seq(source.schema(timeCol)))).parquet(sinkPath), timeCol)
+      else None
+    appendPartitioned(withPartitionColumns(
+      incrementalSlice(source, timeCol, wm), Some(timeCol), processingDate),
+      sinkPath, partitionCols)
   }
 
   // ---------------------------------------------------------------- silver

@@ -46,7 +46,9 @@ object TempDirs {
                    prefix: String): org.apache.spark.sql.DataFrame = {
     val path = s"${scoped(prefix)}/data"
     df.write.parquet(path)
-    df.sparkSession.read.parquet(path)
+    // read back under the written schema: parquet would infer the same
+    // one (nullable), at the cost of a footer-reading job
+    df.sparkSession.read.schema(df.schema).parquet(path)
   }
 
   private def deleteRecursively(f: java.io.File): Unit = {

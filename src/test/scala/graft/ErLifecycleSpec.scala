@@ -165,6 +165,65 @@ class ErLifecycleSpec extends SparkSpec {
     }
   }
 
+  test("a lazy checkpoint keeps its plan's metrics past the job that materializes it") {
+    import graft.operators.Components
+    // the checkpointed plan itself is unreachable once this returns
+    def checkpointed() = {
+      val df = spark.range(0, 1000, 1, 4).groupBy((col("id") % 7).as("k")).count()
+      val cp = Components.lazyCheckpoint(df)
+      (cp, Components.planMetrics(df).map(new java.lang.ref.WeakReference(_)))
+    }
+    val (cp, metrics) = checkpointed()
+    // the first job over the checkpoint cuts its lineage; a second job
+    // already running over that lineage still reports these metrics
+    assert(cp.count() === 7)
+    System.gc()
+    val collected = metrics.count(_.get == null)
+    assert(metrics.nonEmpty && collected == 0, s"$collected of ${metrics.size} metrics collected")
+    Components.dropCheckpoint(cp)
+  }
+
+  test("a maintain + forget cycle loses no task metric updates") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    val lost = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("graft-lost-accumulators", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = {
+        val text = e.getMessage.getFormattedMessage +
+          Option(e.getThrown).map(t => " " + t.getMessage).getOrElse("")
+        if (text.contains("non-existent accumulator")) lost.add(text)
+      }
+    }
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    appender.start()
+    ctx.getConfiguration.getRootLogger.addAppender(appender, Level.ERROR, null)
+    ctx.updateLoggers()
+    // back-to-back GCs: a metric the driver lets go of while its tasks
+    // still run is collected before they report
+    @volatile var busy = true
+    val gc = new Thread(() => while (busy) { System.gc(); Thread.sleep(20) })
+    gc.setDaemon(true)
+    try {
+      gc.start()
+      val dir = graft.pipeline.TempDirs.scoped("graft_eracc_") + "/er"
+      // names one digit apart within a nation cluster, as in the fixtures
+      val rows = (0L until 1500L).map(i => (i, f"Customer#$i%09d", i % 25))
+      IncrementalEr.maintainBatch(dir)(cust(rows.filter(_._1 % 8 != 7)), 0L)
+      IncrementalEr.maintainBatch(dir)(cust(rows.filter(_._1 % 8 == 7)), 1L)
+      IncrementalEr.forget(spark, dir, rows.filter(_._1 % 50 == 3).map(_._1).toDF("c_custkey"), 2L)
+      assert(served(dir).size === 1500 - 30)
+    } finally {
+      busy = false
+      gc.join()
+      ctx.getConfiguration.getRootLogger.removeAppender(appender.getName)
+      ctx.updateLoggers()
+      appender.stop()
+    }
+    assert(lost.isEmpty, s"${lost.size} lost accumulator updates, first: ${lost.peek}")
+  }
+
   test("pre-r16 artifact (commits but no layout marker) fails loudly") {
     val dir = graft.pipeline.TempDirs.scoped("graft_erold_") + "/er"
     // simulate a pre-r16 artifact: a commit marker with no layout marker

@@ -26,14 +26,36 @@ class PipelineSpec extends SparkSpec {
     assert(n2 === orders.filter(col("o_orderdate") > cut).count())
     assert(spark.read.parquet(sink).count() === orders.count())
 
-    // 3rd run: nothing new -> empty-skip branch
+    // 3rd run: nothing new -> empty-skip branch, no data file added
+    val files = spark.read.parquet(sink).inputFiles.toSet
     val n3 = Medallion.bronzeIncrementalLoad(spark, orders, sink, "o_orderdate", today)
     assert(n3 === 0)
+    assert(spark.read.parquet(sink).inputFiles.toSet === files)
     assert(spark.read.parquet(sink).count() === orders.count())
 
     // hive partition columns materialized and prunable
     val p = spark.read.parquet(sink)
     assert(Seq("year", "month", "day").forall(p.columns.contains))
+  }
+
+  test("bronze load: an empty full load creates no sink; the count is the rows written") {
+    val lake = Files.createTempDirectory("graft_lake_empty").toString
+    val sink = s"$lake/bronze/orders"
+    val orders = Tables.orders(spark, sf)
+    val today = java.sql.Date.valueOf("2026-08-12")
+    // empty at plan time (folded to an empty relation) and at run time
+    for (empty <- Seq(orders.filter(lit(false)), orders.filter(col("o_orderkey") < 0))) {
+      assert(Medallion.bronzeIncrementalLoad(spark, empty, sink, "o_orderdate", today) === 0)
+      assert(!Files.exists(java.nio.file.Paths.get(sink)))
+    }
+    val cut = lit(java.time.LocalDateTime.parse("1996-06-30T00:00"))
+    val first = orders.filter(col("o_orderdate") <= cut)
+    val n1 = Medallion.bronzeIncrementalLoad(spark, first, sink, "o_orderdate", today)
+    assert(n1 === first.count())
+    assert(spark.read.parquet(sink).count() === n1)
+    val n2 = Medallion.bronzeIncrementalLoad(spark, orders, sink, "o_orderdate", today)
+    assert(n1 + n2 === orders.count())
+    assert(spark.read.parquet(sink).count() === orders.count())
   }
 
   test("withPartitionColumns falls back to injected processing date") {
