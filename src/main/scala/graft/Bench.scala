@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+
 /** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR and
   * prints a human summary line followed by ONE bounded JSON line (total,
   * slowest-30 + errored queries); the complete per-query/per-rep record
@@ -33,6 +36,12 @@ package graft
   *    you'd ship; the `_prod` twin times the production hash. Skips are
   *    listed in `oracle_twins_skipped`.
   *
+  * Each rep's codegen work lands in the record too: `codegen_compiles`
+  * (classes Janino compiled during the rep, from the JVM-wide
+  * `CodegenMetrics` compilation histogram) and `codegen_ms` (their
+  * compile time, from `CodeGenerator.compileTime`), per query and rep.
+  * A rep that reuses the previous rep's classes compiles none.
+  *
   * A query that throws is recorded as -1 (a timing can never be
   * negative, so failures are unmistakable in the emitted JSON) and
   * listed in an `errors` field.
@@ -49,14 +58,20 @@ object Bench {
     val registry = SparkEntry.queries.filter { case (n, _) =>
       only.forall(_.findFirstIn(n).isDefined) }
     val skipped = registry.keys.filter(n => registry.contains(n + "_prod")).toSeq.sorted
-    // warm-up: trigger codegen + parquet footer reads once, unmeasured
+    // warm-up, unmeasured: class loading, JIT and parquet footer reads
+    // on one query. It does not keep codegen out of the timed reps:
+    // every query's first rep compiles its own classes (codegen_compiles),
+    // and later reps reuse them only while the codegen cache holds them
+    // (at Spark's 100-entry default it did not; Sessions sizes it)
     try registry.get("q02_monthly_sales")
       .foreach(_(spark, sfDir).write.format("noop").mode("overwrite").save())
     catch { case _: Throwable => () }
-    val results = registry.toSeq.sortBy(_._1)
+    val runs = registry.toSeq.sortBy(_._1)
       .filterNot { case (name, _) => skipped.contains(name) }
       .map { case (name, fn) =>
-        val times = (1 to reps).map { _ =>
+        name -> (1 to reps).map { _ =>
+          val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+          val ns0 = CodeGenerator.compileTime
           val t0 = System.nanoTime()
           val dt =
             try { fn(spark, sfDir).write.format("noop").mode("overwrite").save()
@@ -76,18 +91,20 @@ object Bench {
           // An explicit gc per rep keeps every query's measurement
           // independent of its position in the sweep.
           System.gc()
-          dt
+          (dt, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0,
+            (CodeGenerator.compileTime - ns0) / 1e6)
         }
-        name -> times
       }
+    val results = runs.map { case (k, rs) => k -> rs.map(_._1) }
     def best(ts: Seq[Double]): Double = if (ts.exists(_ < 0)) -1.0 else ts.min
     def r4(x: Double): String =
       if (x < 0) "-1" else BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toString
     val qs = results.map { case (k, ts) => "\"" + k + "\":" + r4(best(ts)) }
       .mkString("{", ",", "}")
-    val repsJson = results.map { case (k, ts) =>
-        "\"" + k + "\":" + ts.map(r4).mkString("[", ",", "]") }
-      .mkString("{", ",", "}")
+    // one array per query, one entry per rep: (wall s, compiles, compile ms)
+    def perRep(f: ((Double, Long, Double)) => String): String =
+      runs.map { case (k, rs) => "\"" + k + "\":" + rs.map(f).mkString("[", ",", "]") }
+        .mkString("{", ",", "}")
     val errors = results.collect { case (k, ts) if best(ts) < 0 => "\"" + k + "\"" }
       .mkString("[", ",", "]")
     val skippedJson = skipped.map("\"" + _ + "\"").mkString("[", ",", "]")
@@ -128,7 +145,9 @@ object Bench {
     println(s"""{$head,"queries":$qsTop,"queries_omitted":${results.size - withErrs.size},"file":"$outFile",$tail,"total_sec":${r4(total)}}""")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get("target"))
     java.nio.file.Files.write(java.nio.file.Paths.get("target/bench_last.json"),
-      (s"""{$head,"queries":$qs,"reps":$repsJson,$tail,"total_sec":${r4(total)}}""" + "\n").getBytes("UTF-8"))
+      (s"""{$head,"queries":$qs,"reps":${perRep(r => r4(r._1))},""" +
+        s""""codegen_compiles":${perRep(_._2.toString)},"codegen_ms":${perRep(r => r4(r._3))},""" +
+        s"""$tail,"total_sec":${r4(total)}}""" + "\n").getBytes("UTF-8"))
     spark.stop()
   }
 }

@@ -2,11 +2,15 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Solo per-phase profile of the q239 fold sequence (arrivals / probe
-  * buckets / edges / delta / commit via SPARK_GRAFT_ER_PROFILE) on a
-  * fresh session — the measurement harness behind the r16 layout
-  * decisions (delta-tier bucket count, write repartition). Bench walls
-  * are warm-JVM; this main isolates cold per-phase attribution. */
+/** Solo profile of the q239 fold sequence on a fresh session — the
+  * measurement harness behind the r16 layout decisions (delta-tier
+  * bucket count, write repartition). It prints per-batch walls; the
+  * per-phase split is on the jobs themselves: `IncrementalEr` sets
+  * each job's description to `IncrementalEr.maintainBatch: <phase>`
+  * (arrivals, buckets, edges, contract, cc, moved, commit), which any
+  * SparkListener sees, e.g. Spark's event log
+  * (`-Dspark.eventLog.enabled=true`). Bench walls are warm-JVM; this
+  * main isolates cold attribution. */
 object ErProf {
   def main(args: Array[String]): Unit = {
     val spark = Sessions.local("32")

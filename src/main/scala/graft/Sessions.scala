@@ -38,7 +38,27 @@ import graft.pipeline.{ForkFreeLocalFileSystem, ForkFreeLocalFs}
   *    AtomicTable commits). Without libhadoop the stock local file
   *    system shells out: one `chmod` process per file and directory
   *    written, one `readlink` per rename — thousands of forks per
-  *    lakehouse increment or streaming drain, all of it fixed cost.
+  *    lakehouse increment or streaming drain, all of it fixed cost;
+  *  - `codegen.cache.maxEntries` = 8000 (Spark's default is 100): the
+  *    JVM-wide cache of Janino-compiled classes, keyed by generated
+  *    source. At 100 entries the cache is smaller than one call's own
+  *    working set, so every repeated call compiles all of its classes
+  *    again (about 15 ms each) and the JIT warms each reloaded class
+  *    from scratch. Distinct classes compiled over a whole run of the
+  *    lakehouse benchmark, counted with `CodegenMetrics`:
+  *    `er_incremental` (fold, forget, both compactions, resolved read)
+  *    331, `analytics` 188, `ingest` 135 plus the streaming drain;
+  *    `CodegenReuseSpec`'s ER cycle compiles 319. One `graft.Bench` pass
+  *    over the whole registry (279 timed queries, sf0.01) compiles
+  *    4 300 classes in rep 1 and 457 in rep 2, all of those from 35
+  *    queries whose plans inline a per-run value; 8000 holds that
+  *    whole pass, so a query's classes survive until it runs again.
+  *    Each cached class holds about 8 KB of metaspace (each entry pins
+  *    its own class loader): metaspace after that pass was 239 MB at 4000 entries
+  *    and 207 MB at 100, so a full cache costs about 65 MB. The cache
+  *    is sized once, from the conf active at the JVM's first codegen
+  *    (a static SQL conf), so it is a session-creation constant here,
+  *    not an option: a later session cannot resize it.
   */
 object Sessions {
   def local(cores: String): SparkSession = {
@@ -56,6 +76,7 @@ object Sessions {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.parquet.compression.codec", "snappy")
+      .config("spark.sql.codegen.cache.maxEntries", "8000")
       .config("spark.ui.enabled", "false")
       .config("spark.hadoop.fs.file.impl", classOf[ForkFreeLocalFileSystem].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[ForkFreeLocalFs].getName)

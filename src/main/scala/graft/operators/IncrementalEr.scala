@@ -516,14 +516,36 @@ object IncrementalEr {
     * the caller AFTER this returns — never lands, so the replay
     * contract is unchanged. Cached daemon pool: callers may nest
     * logically (maintainBatch folds the label-delta writes into its
-    * own batch), and write threads block on the driver, not CPU. */
+    * own batch), and write threads block on the driver, not CPU. A
+    * pooled thread keeps the local properties of the moment it was
+    * created, so each task first takes the caller's job description
+    * (the [[phased]] tag) — its jobs are then attributed to the phase
+    * that submitted them, not to whichever phase spawned the thread. */
   private lazy val writePool = scala.concurrent.ExecutionContext
     .fromExecutorService(java.util.concurrent.Executors.newCachedThreadPool(
       (r: Runnable) => { val t = new Thread(r, "er-commit-writer")
         t.setDaemon(true); t }))
 
-  private def inParallel(tasks: Seq[() => Unit]): Unit = {
-    val fs = tasks.map(t => scala.concurrent.Future(t())(writePool))
+  /** Spark's job-description property (what `setJobDescription` sets). */
+  private val JobDescription = "spark.job.description"
+
+  /** Runs `body` with a `phase` function that tags every Spark job
+    * submitted after it as `IncrementalEr.<op>: <phase>` (the job
+    * description, seen by any SparkListener in `onJobStart`'s
+    * properties), then restores the caller's own description. */
+  private def phased(spark: SparkSession, op: String)(
+      body: (String => Unit) => Unit): Unit = {
+    val sc = spark.sparkContext
+    val prior = sc.getLocalProperty(JobDescription)
+    try body(p => sc.setJobDescription(s"IncrementalEr.$op: $p"))
+    finally sc.setJobDescription(prior)
+  }
+
+  private def inParallel(spark: SparkSession, tasks: Seq[() => Unit]): Unit = {
+    val sc = spark.sparkContext
+    val desc = sc.getLocalProperty(JobDescription)
+    val fs = tasks.map(t => scala.concurrent.Future {
+      sc.setJobDescription(desc); t() }(writePool))
     fs.foreach(scala.concurrent.Await.result(_,
       scala.concurrent.duration.Duration.Inf))
   }
@@ -559,7 +581,7 @@ object IncrementalEr {
 
   private def writeLabelDelta(delta: DataFrame, dir: String, batchId: Long,
                               bLab: Int, bMem: Int): Unit =
-    inParallel(labelDeltaWrites(delta, dir, batchId, bLab, bMem))
+    inParallel(delta.sparkSession, labelDeltaWrites(delta, dir, batchId, bLab, bMem))
 
   /** Consume `batchId` with no state change: layout marker (for a
     * brand-new artifact) + commit marker — every invoked id is durably
@@ -576,16 +598,16 @@ object IncrementalEr {
     * batch's touched buckets. Re-observed custkeys (a record re-sent
     * in a later batch) are dropped — they keep their standing label,
     * add no duplicate base/variant rows, and cannot move clusters; an
-    * UPDATE is [[forget]] + re-arrival. */
-  def maintainBatch(dir: String)(batch: DataFrame, batchId: Long): Unit = {
+    * UPDATE is [[forget]] + re-arrival. Jobs carry the phase that
+    * submitted them ([[phased]]): arrivals, buckets, edges, contract,
+    * cc (over-cap graphs only), moved, commit. */
+  def maintainBatch(dir: String)(batch: DataFrame, batchId: Long): Unit =
+    phased(batch.sparkSession, "maintainBatch")(fold(dir, batch, batchId, _))
+
+  private def fold(dir: String, batch: DataFrame, batchId: Long,
+                   phase: String => Unit): Unit = {
     val spark = batch.sparkSession
-    val profile = sys.env.contains("SPARK_GRAFT_ER_PROFILE")
-    var tLast = System.nanoTime()
-    def mark(phase: String): Unit = if (profile) {
-      val now = System.nanoTime()
-      println(f"[er-profile] $phase%-12s ${(now - tLast) / 1e9}%.2fs")
-      tLast = now
-    }
+    phase("arrivals")
     val last = lastCommitted(spark, dir)
     if (last.exists(_ >= batchId)) return
     // LAZY checkpoints throughout this fold (r17, the Components-loop
@@ -623,7 +645,6 @@ object IncrementalEr {
           .lazyCheckpoint()
         (n, a)
     }
-    mark("arrivals")
     if (nObs == 0) {
       Components.dropCheckpoint(arrivals0)
       if (arrivals ne arrivals0) Components.dropCheckpoint(arrivals)
@@ -637,6 +658,7 @@ object IncrementalEr {
     // relations — same marker-only commit, a few trivially-empty jobs,
     // in exchange for one job less on EVERY real fold.
     val bcast = nObs <= MaxBroadcastArrivals
+    phase("buckets")
     // one checkpointed expansion of the arrivals' deletion variants —
     // consumed by the probe-hash derivation, the index probe, and the
     // variant-index commit below (lazy: the probe-hash distinct+collect
@@ -665,7 +687,7 @@ object IncrementalEr {
         baseRows(spark, dir, up, None, Some(bSets))
           .select(col("blk"), col("k"), col("w")))
     }
-    mark("buckets")
+    phase("edges")
     // arrivals0's blocks: for a guarded fold the probe-hash collect
     // above materialized the guarded relation, so the pre-guard rows
     // can go now (batch 0 keeps them — arrivals IS arrivals0 there)
@@ -686,7 +708,6 @@ object IncrementalEr {
           xxhash64(col("v")), Seq(mD, mS))
         (twoN / 2, Some((m(mD), m(mS))))
     }
-    mark("edges")
     // contract new edges through the endpoint labels (arrivals label
     // themselves; standing endpoints from one pruned key-restricted
     // read), CC over the contracted label graph only, then the DELTA:
@@ -698,9 +719,9 @@ object IncrementalEr {
     val delta =
       if (nNE == 0) arrivals.select(col("k").as("v"), col("k").as("component"))
       else {
+        phase("contract")
         val endpoints = newEdges.select(col("ea").as("v"))
           .unionAll(newEdges.select(col("eb").as("v"))).distinct()
-        mark("  endpoints")
         val standingEnd = last.map(up =>
           labelsLatestFor(spark, dir, up, endpoints,
             bcast = 2 * nNE <= MaxBroadcastArrivals, sets = epSets))
@@ -741,7 +762,6 @@ object IncrementalEr {
             arrivals.select(col("k").as("v"), col("k").as("component"))
           case Some(es) if localTouched.exists(
               _.length <= MaxBroadcastArrivals) =>
-            mark("  contracted")
             // DRIVER contraction fold: union-find over the collected
             // label pairs; `merged` and `touched` become LocalRelations
             // (broadcast builds with no job), and the candidate read's
@@ -751,7 +771,7 @@ object IncrementalEr {
             import spark.implicits._
             val merged = Components.unionFindPairs(touchedArr, es).toSeq
               .toDF("component", "g_new")
-            mark("  cc")
+            phase("moved")
             val arrivalRows = arrivals.select(col("k").as("v"), col("k").as("component"))
               .join(broadcast(merged), Seq("component"), "left")
               .select(col("v"), coalesce(col("g_new"), col("component")).as("component"))
@@ -778,7 +798,6 @@ object IncrementalEr {
             }.getOrElse(spark.createDataFrame(
               spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
               StructType(labelsSchema.fields.take(2))))
-            mark("  moved")
             lateDrops ::= contracted
             // LAZY: the two label-delta commit writes below materialize
             // it — the dedicated read-back job is gone (r17)
@@ -786,14 +805,14 @@ object IncrementalEr {
           case _ =>
             // over-cap contracted graph (or over-cap touched set): the
             // unchanged distributed shape
-            mark("  contracted")
             val nC = contracted.count()
             val nTouched = 2 * nC
             val touched = contracted.select(col("a").as("component"))
               .unionAll(contracted.select(col("b").as("component"))).distinct()
+            phase("cc")
             val merged = Components.connectedComponents(contracted, touched)
               .select(col("v").as("component"), col("component").as("g_new"))
-            mark("  cc")
+            phase("moved")
             // broadcast-gated on nTouched (≥ |merged| = |touched|): the
             // dedicated merged-count job is gone (r17)
             def hM(df: DataFrame) =
@@ -821,18 +840,18 @@ object IncrementalEr {
             }.getOrElse(spark.createDataFrame(
               spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
               StructType(labelsSchema.fields.take(2))))
-            mark("  moved")
             lateDrops ::= contracted
             arrivalRows.unionByName(movedStanding).lazyCheckpoint()
         }
       }
-    mark("delta")
+    // the lazy delta materializes inside these writes
+    phase("commit")
     // append-only commits: each batch overwrites exactly its own
     // partitions (replay-idempotent), marker creation is the commit
     // point — the four table writes are independent jobs over
     // checkpointed relations into four directories, overlapped
     // ([[inParallel]]); the marker lands only after ALL of them
-    inParallel(Seq(
+    inParallel(spark, Seq(
       () => writeBucketed(arrivals.withColumn("wb",
           pmod(xxhash64(col("w")), lit(lay.base)).cast("int")),
         baseDir(dir), batchId, "wb"),
@@ -841,7 +860,6 @@ object IncrementalEr {
         variantsDir(dir), batchId, "vb")) ++
       labelDeltaWrites(delta, dir, batchId, lay.labels, lay.members))
     touchMarker(spark, dir, s"$MarkerPrefix$batchId")
-    mark("commit")
     Components.dropCheckpoint(arrivals)
     Components.dropCheckpoint(dA)
     Components.dropCheckpoint(newEdges)
@@ -887,16 +905,16 @@ object IncrementalEr {
     * via maintainBatch is a genuinely new record (tombstones drop out
     * of the standing read, so it self-labels and matches fresh; its
     * stale variant rows can only produce edges to unlabeled vertices,
-    * which the contraction drops). */
+    * which the contraction drops). Jobs carry the phase that
+    * submitted them ([[phased]]): locate, survivors, members, rematch,
+    * cc, leafsets, rewrites, labels. */
   def forget(spark: SparkSession, dir: String, ids: DataFrame,
-             batchId: Long): Unit = {
-    val profile = sys.env.contains("SPARK_GRAFT_ER_PROFILE")
-    var tLast = System.nanoTime()
-    def mark(phase: String): Unit = if (profile) {
-      val now = System.nanoTime()
-      println(f"[er-forget] $phase%-12s ${(now - tLast) / 1e9}%.2fs")
-      tLast = now
-    }
+             batchId: Long): Unit =
+    phased(spark, "forget")(forgetIds(spark, dir, ids, batchId, _))
+
+  private def forgetIds(spark: SparkSession, dir: String, ids: DataFrame,
+                        batchId: Long, phase: String => Unit): Unit = {
+    phase("locate")
     val last = lastCommitted(spark, dir).getOrElse {
       commitNoOp(spark, dir, batchId, hasCommits = false); return
     }
@@ -928,13 +946,13 @@ object IncrementalEr {
     val (cD, cS) = memberModsAt(spark, dir, last, lay)
     val (affM, nAffected) =
       touchedSetsCount(affected, xxhash64(col("component")), Seq(cD, cS))
-    mark("locate")
     if (nAffected == 0) {
       Components.dropCheckpoint(affected)
       affectedIds.unpersist()
       Components.dropCheckpoint(del)
       commitNoOp(spark, dir, batchId, hasCommits = true); return
     }
+    phase("survivors")
     def hDel(df: DataFrame) =
       if (nDel <= MaxBroadcastArrivals) broadcast(df) else df
     val base0 = baseRows(spark, dir, last, None)
@@ -965,7 +983,7 @@ object IncrementalEr {
     val rewritten = survivors
       .join(broadcast(touchedLeafs), Seq(BatchCol, "wb"), "left_semi")
       .lazyCheckpoint()
-    mark("survivors")
+    phase("members")
     // clusters touching a forgotten id (`affected`, computed with the
     // gate above): relabel their REMAINING members from scratch —
     // re-match (FastSS over members only) + CC
@@ -994,7 +1012,7 @@ object IncrementalEr {
       .lazyCheckpoint()
     val nRemaining = remaining.count()
     Components.dropCheckpoint(cand)
-    mark("members")
+    phase("rematch")
     // the member relation feeds edgesTouching through FIVE plan
     // references (both sides of three joins) — checkpoint it so the
     // base scan + semi-joins run once, not per reference (r16)
@@ -1010,7 +1028,7 @@ object IncrementalEr {
     // inside the same job) and doubles as the former isEmpty probe
     val nEdges = edges.count()
     Components.dropCheckpoint(memRel)
-    mark("rematch")
+    phase("cc")
     val newLabels =
       if (nRemaining == 0 || nEdges == 0)
         remaining.select(col("v"), col("v").as("component"))
@@ -1020,7 +1038,7 @@ object IncrementalEr {
     val delta = newLabels.select(col("v"), col("component").cast("long"))
       .unionByName(tombstones)
       .localCheckpoint()
-    mark("cc-delta")
+    phase("leafsets")
     // leafs whose every row was forgotten are absent from the rewrite
     // (dynamic overwrite can't emit an empty partition) and must be
     // dropped; COLLECTED (≤ touched leafs — bounded by the forget set
@@ -1067,13 +1085,13 @@ object IncrementalEr {
         }
     }.toSet
     val staleVar = existingVar -- leafSet(varRewrite, "vb")
-    mark("leafsets")
+    phase("rewrites")
     // relations are materialized off the files (localCheckpoint), so
     // the two rewrites read blocks, not the directories they replace —
     // independent jobs, overlapped; both complete before the label
     // delta, preserving the crash-before-delta replay story (a retry
     // recomputes both rewrites from the intact base read)
-    inParallel(Seq(
+    inParallel(spark, Seq(
       () => rewritten.repartition(col("wb"))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
@@ -1105,10 +1123,9 @@ object IncrementalEr {
     // refresh — invalidate the listing so later scans re-list
     spark.catalog.refreshByPath(baseDir(dir))
     spark.catalog.refreshByPath(variantsDir(dir))
-    mark("rewrites")
+    phase("labels")
     writeLabelDelta(delta, dir, batchId, lay.labels, lay.members)
     touchMarker(spark, dir, s"$MarkerPrefix$batchId")
-    mark("labels")
     Components.dropCheckpoint(del)
     Components.dropCheckpoint(touchedLeafs)
     Components.dropCheckpoint(survivors)
@@ -1183,7 +1200,7 @@ object IncrementalEr {
     if (last >= batchId) return
     val lay = layoutOf(spark, dir)
     val live = baseRows(spark, dir, last, None)
-      .select(col("blk"), col("k"), col("w")).localCheckpoint()
+      .select(col("k"), col("w"), col("blk")).localCheckpoint()
     val (bB, bV) = newBuckets.orElse(targetRowsPerBucket.map { t =>
       val nBase = live.count()
       val nVar = variantRows(spark, dir, last, None).count()
@@ -1191,7 +1208,7 @@ object IncrementalEr {
         math.min(65536L, math.max(16L, (n + t - 1) / t)).toInt
       (size(nBase), size(nVar))
     }).getOrElse((lay.base, lay.variants))
-    inParallel(Seq(
+    inParallel(spark, Seq(
       () => writeBucketed(live.withColumn("wb",
           pmod(xxhash64(col("w")), lit(bB)).cast("int")),
         baseDir(dir), batchId, "wb"),

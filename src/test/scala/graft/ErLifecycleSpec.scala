@@ -238,4 +238,41 @@ class ErLifecycleSpec extends SparkSpec {
       IncrementalEr.resolved(spark, dir).collect()
     }
   }
+
+  test("maintainBatch and forget tag their jobs with their phase, pooled writers " +
+      "included, and give the caller its description back") {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties.getProperty("spark.job.description")).getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val dir = graft.pipeline.TempDirs.scoped("graft_erphase_") + "/er"
+      sc.setJobDescription("caller")
+      IncrementalEr.maintainBatch(dir)(cust(Seq((10L, "cat", 1L), (30L, "dog", 1L))), 0L)
+      IncrementalEr.maintainBatch(dir)(cust(Seq((11L, "cat", 1L))), 1L)
+      IncrementalEr.forget(spark, dir, Seq(10L).toDF("c_custkey"), 2L)
+      spark.range(1).count()
+      sc.setJobDescription("last")
+      spark.range(1).count()
+      // events arrive in submission order: once the last job is seen,
+      // every earlier one is too
+      val deadline = System.nanoTime() + 60e9.toLong
+      while (!seen.contains("last") && System.nanoTime() < deadline) Thread.sleep(50)
+      val descs = seen.toArray(Array.empty[String]).toSeq
+      // the commit writes run on the pooled writer threads
+      Seq("IncrementalEr.maintainBatch: arrivals", "IncrementalEr.maintainBatch: commit",
+          "IncrementalEr.forget: locate", "IncrementalEr.forget: rewrites",
+          "IncrementalEr.forget: labels").foreach(d => assert(descs.contains(d), d))
+      // the job after the ER calls carries the caller's description
+      assert(descs.takeWhile(_ != "last").last === "caller", descs)
+      assert(descs.forall(d => d.startsWith("IncrementalEr.") || d == "caller" || d == "last"),
+        descs)
+    } finally {
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+    }
+  }
 }
