@@ -3,9 +3,10 @@
 
 Usage: merge_scale_records.py <base.json> <patch.json> [<patch2.json> ...] --out <merged.json>
 
-Each patch's `queries` (and `reps`, when present) overwrite/extend the
-base record's — used when a new query tier or a rewritten operator is
-swept solo (SPARK_GRAFT_BENCH_ONLY) instead of re-running the whole
+Each patch's `queries` (and its per-rep maps `reps`, `codegen_compiles`
+and `codegen_ms`, when present) overwrite/extend the base record's; a
+patched query drops the base's per-rep figures. Used when a new query
+tier or a rewritten operator is swept solo (SPARK_GRAFT_BENCH_ONLY) instead of re-running the whole
 82-query sweep. The merged record keeps the base's metadata, clears the
 bench_only stamp (the merged map is full-coverage for the fit), and
 lists every contributing git_head so a reader can see which commit
@@ -13,6 +14,8 @@ measured which rows.
 """
 import json
 import sys
+
+PER_REP = ("reps", "codegen_compiles", "codegen_ms")
 
 args = sys.argv[1:]
 i = args.index("--out")
@@ -24,8 +27,12 @@ heads = {base.get("git_head", "?")}
 for p in paths[1:]:
     patch = json.load(open(p))
     base["queries"].update(patch["queries"])
-    if "reps" in patch:
-        base.setdefault("reps", {}).update(patch["reps"])
+    for key in PER_REP:
+        # a patched query keeps no per-rep figure of the base's run
+        for q in patch["queries"]:
+            base.get(key, {}).pop(q, None)
+        if key in patch:
+            base.setdefault(key, {}).update(patch[key])
     heads.add(patch.get("git_head", "?"))
 base["git_heads_merged"] = sorted(heads)
 base["bench_only"] = None

@@ -39,26 +39,33 @@ import graft.pipeline.{ForkFreeLocalFileSystem, ForkFreeLocalFs}
   *    system shells out: one `chmod` process per file and directory
   *    written, one `readlink` per rename — thousands of forks per
   *    lakehouse increment or streaming drain, all of it fixed cost;
-  *  - `codegen.cache.maxEntries` = 8000 (Spark's default is 100): the
-  *    JVM-wide cache of Janino-compiled classes, keyed by generated
-  *    source. At 100 entries the cache is smaller than one call's own
-  *    working set, so every repeated call compiles all of its classes
-  *    again (about 15 ms each) and the JIT warms each reloaded class
-  *    from scratch. Distinct classes compiled over a whole run of the
-  *    lakehouse benchmark, counted with `CodegenMetrics`:
-  *    `er_incremental` (fold, forget, both compactions, resolved read)
-  *    331, `analytics` 188, `ingest` 135 plus the streaming drain;
-  *    `CodegenReuseSpec`'s ER cycle compiles 319. One `graft.Bench` pass
-  *    over the whole registry (279 timed queries, sf0.01) compiles
-  *    4 300 classes in rep 1 and 457 in rep 2, all of those from 35
-  *    queries whose plans inline a per-run value; 8000 holds that
-  *    whole pass, so a query's classes survive until it runs again.
-  *    Each cached class holds about 8 KB of metaspace (each entry pins
-  *    its own class loader): metaspace after that pass was 239 MB at 4000 entries
-  *    and 207 MB at 100, so a full cache costs about 65 MB. The cache
-  *    is sized once, from the conf active at the JVM's first codegen
-  *    (a static SQL conf), so it is a session-creation constant here,
-  *    not an option: a later session cannot resize it.
+  *  - `codegen.cache.maxEntries` = 4000 (Spark's default is 100): the
+  *    JVM-wide cache of Janino-compiled classes, keyed by the generated
+  *    source together with the compiling thread's context class loader
+  *    (so a source compiled under two loaders is two entries; see the
+  *    CHANGES.md FOUND line on the streaming drain, whose 8 queries
+  *    each compile their own copy). At 100 entries the cache is smaller
+  *    than one call's own working set, so every repeated call compiles
+  *    all of its classes again (about 15 ms each) and the JIT warms
+  *    each reloaded class from scratch. Working sets, as distinct
+  *    classes compiled over a whole run of the lakehouse benchmark
+  *    (counted with `CodegenMetrics`): `er_incremental` (fold, forget,
+  *    both compactions, resolved read) 331, `analytics` 188, `ingest`
+  *    135 plus the streaming drain; `CodegenReuseSpec`'s ER cycle 319.
+  *    `graft.Bench` runs each query's reps back to back, so a rep needs
+  *    only its own query's classes (at most 206, q275); at 4000 a
+  *    second Bench rep over the registry (sf0.01) compiled only classes
+  *    whose source inlines a per-run value, which no cache size
+  *    reuses. 4000 is about 12× the largest working set: room for the
+  *    dead copies that per-run literals leave (22 per ER cycle with
+  *    fresh batch ids), which the cache's least-recently-used eviction
+  *    drops first. Cost, measured after a Bench pass that compiled
+  *    4 300 classes (`-Xlog:gc+metaspace`, last full GC): metaspace
+  *    239 MB with a full 4000-entry cache, 207 MB at 100, so about
+  *    32 MB (8 KB a class; each entry pins its own class loader). The
+  *    cache is sized once, from the conf active at the JVM's first
+  *    codegen (a static SQL conf), so it is a session-creation
+  *    constant here, not an option: a later session cannot resize it.
   */
 object Sessions {
   def local(cores: String): SparkSession = {
@@ -76,7 +83,7 @@ object Sessions {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.parquet.compression.codec", "snappy")
-      .config("spark.sql.codegen.cache.maxEntries", "8000")
+      .config("spark.sql.codegen.cache.maxEntries", "4000")
       .config("spark.ui.enabled", "false")
       .config("spark.hadoop.fs.file.impl", classOf[ForkFreeLocalFileSystem].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[ForkFreeLocalFs].getName)
