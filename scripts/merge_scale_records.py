@@ -6,11 +6,11 @@ Usage: merge_scale_records.py <base.json> <patch.json> [<patch2.json> ...] --out
 Each patch's `queries` (and its per-rep maps `reps`, `codegen_compiles`
 and `codegen_ms`, when present) overwrite/extend the base record's; a
 patched query drops the base's per-rep figures. Used when a new query
-tier or a rewritten operator is swept solo (SPARK_GRAFT_BENCH_ONLY) instead of re-running the whole
-82-query sweep. The merged record keeps the base's metadata, clears the
-bench_only stamp (the merged map is full-coverage for the fit), and
-lists every contributing git_head so a reader can see which commit
-measured which rows.
+tier or a rewritten operator is swept solo (SPARK_GRAFT_BENCH_ONLY)
+instead of re-running the whole 82-query sweep. The merged record keeps
+the base's metadata, clears the bench_only stamp (the merged map is
+full-coverage for the fit), and lists every contributing git_head so a
+reader can see which commit measured which rows.
 """
 import json
 import sys
