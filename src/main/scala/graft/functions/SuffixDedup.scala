@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-import graft.operators.Components.LazyCheckpoint
+import graft.pipeline.TempDirs.LazyCheckpoint
 
 /** EXACT substring-duplication detection via distributed prefix
   * doubling — the suffix-array recipe behind Lee et al. 2022's
@@ -119,7 +119,7 @@ object SuffixDedup {
           Seq("label", "label2"))
         .lazyCheckpoint()
       next.count() // materialize before releasing the parent round
-      graft.operators.Components.dropCheckpoint(labels)
+      graft.pipeline.TempDirs.dropCheckpoint(labels)
       labels = next
       len += step
     }
@@ -136,7 +136,7 @@ object SuffixDedup {
     // from the files. RegistrySpec tripwires the invariant (no
     // persisted RDDs survive any registered query's construction).
     val out = graft.pipeline.TempDirs.spillParquet(labels, "graft_suffix_labels_")
-    graft.operators.Components.dropCheckpoint(labels)
+    graft.pipeline.TempDirs.dropCheckpoint(labels)
     out
   }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.operators.Components.LazyCheckpoint
+import graft.pipeline.TempDirs.LazyCheckpoint
 
 /** Text-analysis functions for a training-data pipeline, built entirely
   * from codegen'd `org.apache.spark.sql.functions` (no UDFs): language
@@ -139,8 +139,9 @@ object Text {
     // LAZY checkpoints, one job per round: round k's top-pair collect is
     // the action that materializes round k−1's rewrite, and a round's
     // blocks are dropped only AFTER the collect that consumed them (the
-    // Components labelSum discipline — dropping before the dependent
-    // materializes would free blocks a truncated lineage can't rebuild)
+    // Components star-contraction discipline — dropping before the
+    // dependent materializes would free blocks a truncated lineage
+    // can't rebuild)
     var toks = docs.select(bpeTokens(col(textCol)).as("t")).lazyCheckpoint()
     var prev: DataFrame = null
     val merges = Seq.newBuilder[(Int, String, String, Long)]
@@ -150,7 +151,7 @@ object Text {
       val top = toks.select(explode(adjacentPairs(col("t"))).as("pair"))
         .groupBy("pair").agg(count(lit(1)).as("n"))
         .orderBy(col("n").desc, col("pair")).limit(1).collect()
-      if (prev != null) { graft.operators.Components.dropCheckpoint(prev); prev = null }
+      if (prev != null) { graft.pipeline.TempDirs.dropCheckpoint(prev); prev = null }
       if (top.isEmpty) exhausted = true
       else {
         val Array(a, b) = top(0).getString(0).split(" ", 2)
@@ -160,8 +161,8 @@ object Text {
       }
       r += 1
     }
-    if (prev != null) graft.operators.Components.dropCheckpoint(prev)
-    graft.operators.Components.dropCheckpoint(toks)
+    if (prev != null) graft.pipeline.TempDirs.dropCheckpoint(prev)
+    graft.pipeline.TempDirs.dropCheckpoint(toks)
     merges.result()
   }
 

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Multi-source BFS hop distances over an edge relation — the Pregel
   * frontier-expansion shape (Malewicz et al., SIGMOD'10) expressed as
   * per-round equi-joins, the same discipline as
-  * [[graft.operators.Components]] (label propagation) and
+  * [[graft.operators.Components]] (star contraction) and
   * [[graft.operators.PageRank]].
   *
   * Semantics: `hop(v)` = the minimum number of edges on any path from

@@ -6,7 +6,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
-import graft.operators.Components.LazyCheckpoint
+import graft.pipeline.TempDirs
+import graft.pipeline.TempDirs.LazyCheckpoint
 
 /** INCREMENTAL entity resolution — q228's block → match → canonicalize
   * pipeline maintained under customer ARRIVALS without re-matching the
@@ -519,31 +520,17 @@ object IncrementalEr {
     * own batch), and write threads block on the driver, not CPU. A
     * pooled thread keeps the local properties of the moment it was
     * created, so each task first takes the caller's job description
-    * (the [[phased]] tag) — its jobs are then attributed to the phase
-    * that submitted them, not to whichever phase spawned the thread. */
+    * (the [[Phases.phased]] tag) — its jobs are then attributed to the
+    * phase that submitted them, not to whichever phase spawned the
+    * thread. */
   private lazy val writePool = scala.concurrent.ExecutionContext
     .fromExecutorService(java.util.concurrent.Executors.newCachedThreadPool(
       (r: Runnable) => { val t = new Thread(r, "er-commit-writer")
         t.setDaemon(true); t }))
 
-  /** Spark's job-description property (what `setJobDescription` sets). */
-  private val JobDescription = "spark.job.description"
-
-  /** Runs `body` with a `phase` function that tags every Spark job
-    * submitted after it as `IncrementalEr.<op>: <phase>` (the job
-    * description, seen by any SparkListener in `onJobStart`'s
-    * properties), then restores the caller's own description. */
-  private def phased(spark: SparkSession, op: String)(
-      body: (String => Unit) => Unit): Unit = {
-    val sc = spark.sparkContext
-    val prior = sc.getLocalProperty(JobDescription)
-    try body(p => sc.setJobDescription(s"IncrementalEr.$op: $p"))
-    finally sc.setJobDescription(prior)
-  }
-
   private def inParallel(spark: SparkSession, tasks: Seq[() => Unit]): Unit = {
     val sc = spark.sparkContext
-    val desc = sc.getLocalProperty(JobDescription)
+    val desc = sc.getLocalProperty(Phases.JobDescription)
     val fs = tasks.map(t => scala.concurrent.Future {
       sc.setJobDescription(desc); t() }(writePool))
     fs.foreach(scala.concurrent.Await.result(_,
@@ -599,10 +586,11 @@ object IncrementalEr {
     * in a later batch) are dropped — they keep their standing label,
     * add no duplicate base/variant rows, and cannot move clusters; an
     * UPDATE is [[forget]] + re-arrival. Jobs carry the phase that
-    * submitted them ([[phased]]): arrivals, buckets, edges, contract,
-    * cc (over-cap graphs only), moved, commit. */
+    * submitted them ([[Phases.phased]]): arrivals, buckets, edges,
+    * contract, cc (over-cap graphs only), moved, commit. */
   def maintainBatch(dir: String)(batch: DataFrame, batchId: Long): Unit =
-    phased(batch.sparkSession, "maintainBatch")(fold(dir, batch, batchId, _))
+    Phases.phased(batch.sparkSession, "IncrementalEr.maintainBatch")(
+      fold(dir, batch, batchId, _))
 
   private def fold(dir: String, batch: DataFrame, batchId: Long,
                    phase: String => Unit): Unit = {
@@ -646,8 +634,8 @@ object IncrementalEr {
         (n, a)
     }
     if (nObs == 0) {
-      Components.dropCheckpoint(arrivals0)
-      if (arrivals ne arrivals0) Components.dropCheckpoint(arrivals)
+      TempDirs.dropCheckpoint(arrivals0)
+      if (arrivals ne arrivals0) TempDirs.dropCheckpoint(arrivals)
       commitNoOp(spark, dir, batchId, last.isDefined); return
     }
     // |arrivals| ≤ nObs: the guarded count job is gone (r17), so every
@@ -691,7 +679,7 @@ object IncrementalEr {
     // arrivals0's blocks: for a guarded fold the probe-hash collect
     // above materialized the guarded relation, so the pre-guard rows
     // can go now (batch 0 keeps them — arrivals IS arrivals0 there)
-    if (arrivals ne arrivals0) Components.dropCheckpoint(arrivals0)
+    if (arrivals ne arrivals0) TempDirs.dropCheckpoint(arrivals0)
     val newEdges = edgesIndexed(arrivals, standing.map(_._1),
       standing.map(_._2), bcast, delsA = Some(dA)).lazyCheckpoint()
     // ONE job (r17 — was an edge-count job plus the standing-label
@@ -749,16 +737,16 @@ object IncrementalEr {
         // candidate read's residue collect). The contracted label graph
         // is bounded by touched components — at ANY corpus size it
         // stays batch-shaped — but an over-cap graph falls back to the
-        // distributed CC below, unchanged.
+        // distributed CC below.
         val localRows = LocalGraph.takeUnder(
           contracted.select(col("a").cast("long"), col("b").cast("long")),
-          Components.LocalCcMaxRows)
+          LocalGraph.MaxRows)
         val localEs = localRows.map(_.map(r => (r.getLong(0), r.getLong(1))))
         val localTouched = localEs.map(es =>
           (es.map(_._1) ++ es.map(_._2)).distinct)
         localEs match {
           case Some(es) if es.isEmpty =>
-            Components.dropCheckpoint(contracted)
+            TempDirs.dropCheckpoint(contracted)
             arrivals.select(col("k").as("v"), col("k").as("component"))
           case Some(es) if localTouched.exists(
               _.length <= MaxBroadcastArrivals) =>
@@ -803,15 +791,24 @@ object IncrementalEr {
             // it — the dedicated read-back job is gone (r17)
             arrivalRows.unionByName(movedStanding).lazyCheckpoint()
           case _ =>
-            // over-cap contracted graph (or over-cap touched set): the
-            // unchanged distributed shape
-            val nC = contracted.count()
-            val nTouched = 2 * nC
+            // over-cap touched set (the take fetched the edges: union-find
+            // them) or over-cap contracted graph (the take rejected it:
+            // star contraction, with no second take)
             val touched = contracted.select(col("a").as("component"))
               .unionAll(contracted.select(col("b").as("component"))).distinct()
-            phase("cc")
-            val merged = Components.connectedComponents(contracted, touched)
-              .select(col("v").as("component"), col("component").as("g_new"))
+            val (nTouched, merged) = (localEs, localTouched) match {
+              case (Some(es), Some(touchedArr)) =>
+                import spark.implicits._
+                (touchedArr.length.toLong,
+                  Components.unionFindPairs(touchedArr, es).toSeq
+                    .toDF("component", "g_new"))
+              case _ =>
+                val nC = contracted.count()
+                phase("cc")
+                (2 * nC, Components.connectedComponents(contracted, touched,
+                    localMaxRows = 0L)
+                  .select(col("v").as("component"), col("component").as("g_new")))
+            }
             phase("moved")
             // broadcast-gated on nTouched (≥ |merged| = |touched|): the
             // dedicated merged-count job is gone (r17)
@@ -860,11 +857,11 @@ object IncrementalEr {
         variantsDir(dir), batchId, "vb")) ++
       labelDeltaWrites(delta, dir, batchId, lay.labels, lay.members))
     touchMarker(spark, dir, s"$MarkerPrefix$batchId")
-    Components.dropCheckpoint(arrivals)
-    Components.dropCheckpoint(dA)
-    Components.dropCheckpoint(newEdges)
-    Components.dropCheckpoint(delta)
-    lateDrops.foreach(Components.dropCheckpoint)
+    TempDirs.dropCheckpoint(arrivals)
+    TempDirs.dropCheckpoint(dA)
+    TempDirs.dropCheckpoint(newEdges)
+    TempDirs.dropCheckpoint(delta)
+    lateDrops.foreach(TempDirs.dropCheckpoint)
   }
 
   /** Right-to-be-forgotten on the ER artifact (the [[graft.functions
@@ -906,11 +903,11 @@ object IncrementalEr {
     * of the standing read, so it self-labels and matches fresh; its
     * stale variant rows can only produce edges to unlabeled vertices,
     * which the contraction drops). Jobs carry the phase that
-    * submitted them ([[phased]]): locate, survivors, members, rematch,
-    * cc, leafsets, rewrites, labels. */
+    * submitted them ([[Phases.phased]]): locate, survivors, members,
+    * rematch, cc, leafsets, rewrites, labels. */
   def forget(spark: SparkSession, dir: String, ids: DataFrame,
              batchId: Long): Unit =
-    phased(spark, "forget")(forgetIds(spark, dir, ids, batchId, _))
+    Phases.phased(spark, "IncrementalEr.forget")(forgetIds(spark, dir, ids, batchId, _))
 
   private def forgetIds(spark: SparkSession, dir: String, ids: DataFrame,
                         batchId: Long, phase: String => Unit): Unit = {
@@ -931,7 +928,7 @@ object IncrementalEr {
     val (lD, lS) = labelModsAt(spark, dir, last, lay)
     val (delM, nDel) = touchedSetsCount(del, xxhash64(col("k")), Seq(lD, lS))
     if (nDel == 0) {
-      Components.dropCheckpoint(del)
+      TempDirs.dropCheckpoint(del)
       commitNoOp(spark, dir, batchId, hasCommits = true); return
     }
     val affectedIds = labelsLatestFor(spark, dir, last,
@@ -947,9 +944,9 @@ object IncrementalEr {
     val (affM, nAffected) =
       touchedSetsCount(affected, xxhash64(col("component")), Seq(cD, cS))
     if (nAffected == 0) {
-      Components.dropCheckpoint(affected)
+      TempDirs.dropCheckpoint(affected)
       affectedIds.unpersist()
-      Components.dropCheckpoint(del)
+      TempDirs.dropCheckpoint(del)
       commitNoOp(spark, dir, batchId, hasCommits = true); return
     }
     phase("survivors")
@@ -1011,7 +1008,7 @@ object IncrementalEr {
       .select(col("v"))
       .lazyCheckpoint()
     val nRemaining = remaining.count()
-    Components.dropCheckpoint(cand)
+    TempDirs.dropCheckpoint(cand)
     phase("rematch")
     // the member relation feeds edgesTouching through FIVE plan
     // references (both sides of three joins) — checkpoint it so the
@@ -1027,7 +1024,7 @@ object IncrementalEr {
     // ONE count materializes the edge checkpoint (memRel's blocks land
     // inside the same job) and doubles as the former isEmpty probe
     val nEdges = edges.count()
-    Components.dropCheckpoint(memRel)
+    TempDirs.dropCheckpoint(memRel)
     phase("cc")
     val newLabels =
       if (nRemaining == 0 || nEdges == 0)
@@ -1126,15 +1123,15 @@ object IncrementalEr {
     phase("labels")
     writeLabelDelta(delta, dir, batchId, lay.labels, lay.members)
     touchMarker(spark, dir, s"$MarkerPrefix$batchId")
-    Components.dropCheckpoint(del)
-    Components.dropCheckpoint(touchedLeafs)
-    Components.dropCheckpoint(survivors)
-    Components.dropCheckpoint(rewritten)
-    Components.dropCheckpoint(varRewrite)
-    Components.dropCheckpoint(delta)
-    Components.dropCheckpoint(affected)
-    Components.dropCheckpoint(remaining)
-    Components.dropCheckpoint(edges)
+    TempDirs.dropCheckpoint(del)
+    TempDirs.dropCheckpoint(touchedLeafs)
+    TempDirs.dropCheckpoint(survivors)
+    TempDirs.dropCheckpoint(rewritten)
+    TempDirs.dropCheckpoint(varRewrite)
+    TempDirs.dropCheckpoint(delta)
+    TempDirs.dropCheckpoint(affected)
+    TempDirs.dropCheckpoint(remaining)
+    TempDirs.dropCheckpoint(edges)
     affectedIds.unpersist()
   }
 
@@ -1173,7 +1170,7 @@ object IncrementalEr {
     writeLabelDelta(snapshot, dir, batchId, bL, bM)
     touchMarker(spark, dir, s"$SnapshotPrefix${batchId}_${bL}_$bM")
     touchMarker(spark, dir, s"$MarkerPrefix$batchId")
-    Components.dropCheckpoint(snapshot)
+    TempDirs.dropCheckpoint(snapshot)
   }
 
   /** Fold the accumulated base + variant delta partitions into ONE
@@ -1217,7 +1214,7 @@ object IncrementalEr {
         variantsDir(dir), batchId, "vb")))
     touchMarker(spark, dir, s"$BaseSnapPrefix${batchId}_${bB}_$bV")
     touchMarker(spark, dir, s"$MarkerPrefix$batchId")
-    Components.dropCheckpoint(live)
+    TempDirs.dropCheckpoint(live)
   }
 
   /** Drop label/member partitions BELOW the current label snapshot

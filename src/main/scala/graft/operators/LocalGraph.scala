@@ -2,29 +2,28 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row}
 
-/** Shared gate for the DRIVER-LOCAL fast paths of the iterative graph
-  * operators ([[Bfs]], [[Sssp]], [[KCore]], [[PageRank]]) — the r16
-  * [[Components]] union-find treatment generalized. Each distributed
+/** Shared gate for the DRIVER-LOCAL fast paths of the graph operators:
+  * [[Components]] (union-find), the [[IncrementalEr]] contracted-graph
+  * fold, [[Bfs]], [[Sssp]], [[KCore]] and [[PageRank]]. Each distributed
   * round of these loops is a join + aggregate (+ lineage-truncating
   * spill) JOB: several hundred ms of fixed driver/scheduling cost even
   * when the graph is a few thousand rows, so `rounds` iterations over
   * a small graph are almost pure overhead. A graph whose MEASURED size
   * fits under the cap is instead solved on the driver in one bounded
   * collect plus one scratch-parquet spill; anything larger takes the
-  * operator's unchanged distributed loop. Each operator's local loop
-  * replays the same min/count/integer-div arithmetic over the same
-  * rows as its distributed rounds — bit-equality is pinned per
-  * operator by spec (fixed + randomized graphs, local vs cap-0).
+  * operator's distributed loop. Each local side returns the same rows
+  * as its distributed side — pinned per operator by spec (fixed +
+  * randomized graphs, local vs cap-0).
   *
   * The gate is a bounded take(cap + 1): ONE incremental pass that
   * decides AND fetches — never count-then-collect, which would execute
   * an expensive edge-generation plan once for the gate and again for
   * the collect. An over-cap graph pays one discarded partial scan and
-  * falls through. Cap default 1 M rows (vertices + edges — tens of MB
-  * of collected rows, a bounded driver-memory load on any cluster),
-  * env `SPARK_GRAFT_GRAPH_LOCAL_MAX` (0 disables) for cluster
-  * retuning — the same measured-not-estimated discipline as the
-  * broadcast caps and `SPARK_GRAFT_CC_LOCAL_MAX`.
+  * falls through. One cap for every operator, [[MaxRows]]: default 1 M
+  * rows (vertices + edges — tens of MB of collected rows, a bounded
+  * driver-memory load on any cluster), env
+  * `SPARK_GRAFT_GRAPH_LOCAL_MAX` (0 disables) for cluster retuning — the
+  * same measured-not-estimated discipline as the broadcast caps.
   */
 private[graft] object LocalGraph {
 
@@ -53,12 +52,25 @@ private[graft] object LocalGraph {
     * staged edges) — use [[collectUnder]] when re-executing `df` is
     * known cheap. */
   def takeUnder(df: DataFrame, cap0: Long): Option[Array[Row]] =
-    if (cap0 <= 0) None
-    else {
-      val cap = math.min(cap0, Int.MaxValue - 1L).toInt
-      val rows = df.take(cap + 1)
-      if (rows.length <= cap) Some(rows) else None
-    }
+    if (cap0 <= 0) None else takeAtMost(df, cap0)
+
+  /** [[takeUnder]] for a whole graph: Some((vertex rows, edge rows))
+    * iff cap > 0 and |V| + |E| ≤ cap. The vertex take runs first and the
+    * edges get what is left, so a graph whose vertices fill the cap
+    * exactly is still local when it has no edges. */
+  def takeGraphUnder(vertices: DataFrame, edges: DataFrame,
+                     cap: Long): Option[(Array[Row], Array[Row])] =
+    for {
+      vRows <- takeUnder(vertices, cap)
+      eRows <- takeAtMost(edges, cap - vRows.length)
+    } yield (vRows, eRows)
+
+  /** Some(all rows) iff `df` has at most `cap` ≥ 0 rows. */
+  private def takeAtMost(df: DataFrame, cap0: Long): Option[Array[Row]] = {
+    val cap = math.min(cap0, Int.MaxValue - 1L).toInt
+    val rows = df.take(cap + 1)
+    if (rows.length <= cap) Some(rows) else None
+  }
 
   /** [[takeUnder]] for relations that are CHEAP to execute twice (the
     * Bfs/Sssp/KCore call sites — their edge relations arrive staged to

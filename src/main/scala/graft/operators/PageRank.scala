@@ -149,14 +149,14 @@ object PageRank {
           (teleport +
             expr(s"($dampNum * coalesce(sum_in, 0L)) div $dampDen")).as("rank"))
         .localCheckpoint()
-      Components.dropCheckpoint(ranks)
+      graft.pipeline.TempDirs.dropCheckpoint(ranks)
       ranks = next
     }
     // spill-and-release (TempDirs.spillParquet contract): the converged
     // ranks must not reach a registered query as a live checkpoint block
     val out = graft.pipeline.TempDirs.spillParquet(
       ranks.select(col("v").as(idCol), col("rank")), "graft_pagerank_")
-    Components.dropCheckpoint(ranks)
+    graft.pipeline.TempDirs.dropCheckpoint(ranks)
     sym.unpersist()
     out
   }

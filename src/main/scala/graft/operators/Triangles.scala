@@ -59,14 +59,13 @@ object Triangles {
     * set given as columns (a, b) with a < b. Returns
     * (n, degree, triangles) for every node incident to an edge, with
     * triangles = 0 where none close. */
-  def perNode(edges: DataFrame): DataFrame = {
-    val profile = sys.env.contains("SPARK_GRAFT_TRI_PROFILE")
-    var tLast = System.nanoTime()
-    def mark(phase: String): Unit = if (profile) {
-      val now = System.nanoTime()
-      println(f"[tri-profile] $phase%-12s ${(now - tLast) / 1e9}%.2fs")
-      tLast = now
-    }
+  def perNode(edges: DataFrame): DataFrame =
+    Phases.phased(edges.sparkSession, "Triangles.perNode")(enumerate(edges, _))
+
+  /** [[perNode]]'s body; its staging jobs carry their phase: degree,
+    * orient, adjacency, intersect. */
+  private def enumerate(edges: DataFrame, phase: String => Unit): DataFrame = {
+    phase("degree")
     val e = edges.persist(StorageLevel.MEMORY_AND_DISK)
     // STAGE the degree relation (r17): referenced by both orientation
     // joins and the final output join, an unstaged deg re-aggregated
@@ -94,22 +93,21 @@ object Triangles {
         when(col("da") < col("db") ||
           (col("da") === col("db") && col("a") < col("b")), col("b"))
           .otherwise(col("a")).as("v"))
-    if (profile && sys.env.contains("SPARK_GRAFT_TRI_EXPLAIN"))
-      println("== ori0 ==\n" + ori0.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
+    phase("orient")
     val ori = graft.pipeline.TempDirs.spillParquet(ori0, "graft_tri_ori_")
-    mark("orient")
     // sorted out-adjacency, STAGED once (r17): both attach joins below
     // reference it — unstaged, each built its own ObjectHashAggregate
     // over a separate m-row shuffle; file-backed it aggregates once and
     // broadcasts statically under the threshold (same scale gate as deg
     // — arrays are O(√m) by the orientation cap, so total bytes ≈ m)
+    phase("adjacency")
     val adj = graft.pipeline.TempDirs.spillParquet(
       ori.groupBy(col("u").as("n"))
         .agg(sort_array(collect_list(col("v"))).as("nbrs")),
       "graft_tri_adj_")
     // attach N⁺(u) and N⁺(v) to each oriented edge, then each
     // intersection element is exactly one triangle's third vertex
+    phase("intersect")
     val tri = ori
       .join(adj.select(col("n").as("u"), col("nbrs").as("nu")), "u")
       .join(adj.select(col("n").as("v"), col("nbrs").as("nv")), "v")
@@ -123,11 +121,6 @@ object Triangles {
         .select(col("n"), col("degree"),
           coalesce(col("triangles"), lit(0L)).as("triangles")),
       "graft_tri_out_")
-    mark("intersect")
-    if (profile && sys.env.contains("SPARK_GRAFT_TRI_EXPLAIN"))
-      println("== tri/out (pre-spill shape) ==\n" +
-        deg.join(perNode, Seq("n"), "left").queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode))
     e.unpersist()
     out
   }

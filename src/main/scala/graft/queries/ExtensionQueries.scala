@@ -698,7 +698,7 @@ object ExtensionQueries {
   }
 
   /** q68 — dedup CLUSTERING: rare-gram candidate edges → distributed
-    * connected components (iterative min-label propagation), the stage
+    * connected components (driver union-find under the graph cap), the stage
     * that turns pairwise near-dup evidence into canonical groups. Every
     * doc gets the minimum doc_id reachable through shared-rare-gram
     * edges as its component (isolated docs label themselves). The
@@ -736,20 +736,20 @@ object ExtensionQueries {
       .select(col("v").as("doc_id"), col("component"))
   }
 
-  /** q83 — q68's twin through the O(log n) STAR-CONTRACTION components
-    * (large-star/small-star, Kiveris et al. SoCC'14) instead of label
-    * propagation: same rare-gram edge set, same oracle fixpoint
-    * (recursive-CTE transitive closure, reused verbatim), different
-    * distributed algorithm. Hash-green here means the adversarial-graph
-    * upgrade path is itself under the exact gate, not just spec'd
-    * equivalent to the propagation loop. */
+  /** q83 — q68's twin on the DISTRIBUTED side of the components gate
+    * (`localMaxRows = 0`: O(log n) star contraction, large-star/
+    * small-star, Kiveris et al. SoCC'14) instead of the driver
+    * union-find: same rare-gram edge set, same oracle fixpoint
+    * (recursive-CTE transitive closure, reused verbatim). Hash-green
+    * here means the above-cap path is itself under the exact gate,
+    * not just spec'd equal to the union-find. */
   val q83 = Q("q83_dedup_components_star", q68.oracle.get) { (s, d) =>
     val docs = Tables.documents(s, d)
     val edges = Dedup.rareGramEdges(docs, "doc_id", "text", n = 3,
       maxDf = 50L, minShared = 2L)
-    val (labels, _) = graft.operators.Components
-      .connectedComponentsStar(edges, docs.select(col("doc_id")))
-    labels.select(col("v").as("doc_id"), col("component"))
+    graft.operators.Components
+      .connectedComponents(edges, docs.select(col("doc_id")), localMaxRows = 0L)
+      .select(col("v").as("doc_id"), col("component"))
   }
 
   /** q125 — LEAKAGE-SAFE train/val/test split: q57's keyed-hash split

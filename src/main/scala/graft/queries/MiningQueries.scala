@@ -1518,8 +1518,8 @@ object MiningQueries {
     * prune avoids and the component fixpoint as the q68 recursive-CTE
     * transitive closure — the entire candidates → verify → clusters
     * chain under one hash gate. Scale shape: FastSS equi-joins per
-    * block + diameter-bounded label propagation (match clusters are
-    * shallow); nothing quadratic, nothing driver-side. */
+    * block + connected components (driver union-find under the graph
+    * cap, O(log n) star contraction above it); nothing quadratic. */
   val q228 = Q("q228_entity_resolution",
     """WITH RECURSIVE e0 AS (
       |  SELECT a.c_custkey AS ea, b.c_custkey AS eb
@@ -1641,7 +1641,7 @@ object MiningQueries {
     * crafted-variant behavior (case, token order, accent + typo
     * composition) is pinned in MiningSpec. Scale shape is exactly
     * q228: normalization is map-only, everything downstream is the
-    * same FastSS equi-joins + bounded label propagation. */
+    * same FastSS equi-joins + connected components. */
   val q261 = Q("q261_entity_resolution_normalized",
     """WITH RECURSIVE c AS (
       |  SELECT c_custkey, c_nationkey,

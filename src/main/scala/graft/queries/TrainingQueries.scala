@@ -260,7 +260,7 @@ object TrainingQueries {
     * sampled codebook) → connected components → canonical id per
     * vector (+ keep flag). This is the SemDeDup pipeline shape: at
     * 100 TB the pair generation is an equi-join on centroid (never
-    * O(n²)) and the clustering is the same min-label loop q68 gates.
+    * O(n²)) and the clustering is the same components operator q68 gates.
     * The oracle replays pairs via the shared IVF CTE and the cluster
     * fixpoint via a recursive transitive-closure CTE. */
   val q78 = Q("q78_semantic_dedup", {

@@ -1,22 +1,44 @@
 package graft
 
 import graft.functions.Dedup
-import graft.operators.Components
+import graft.operators.{Components, LocalGraph}
 
-/** Distributed connected components (min-label propagation) — the
-  * clustering stage of dedup. Registered under the oracle as q68; these
-  * cases pin the graph semantics the oracle can't isolate. */
+/** Connected components — the clustering stage of dedup: driver
+  * union-find under the LocalGraph cap, star contraction above it.
+  * Registered under the oracle as q68 (driver side) and q83 (distributed
+  * side); these cases pin the graph semantics the oracle can't isolate. */
 class ComponentsSpec extends SparkSpec {
   import spark.implicits._
 
-  private def comps(edges: Seq[(Long, Long)], vertices: Seq[Long],
-                    maxIters: Int = 100): Map[Long, Long] =
-    Components.connectedComponents(
-      edges.toDF("a", "b"), vertices.toDF("v"), maxIters)
+  private def comps(edges: Seq[(Long, Long)], vertices: Seq[Long]): Map[Long, Long] =
+    Components.connectedComponents(edges.toDF("a", "b"), vertices.toDF("v"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
+  /** Min-label propagation to a fixpoint, on the driver: the reference
+    * labelling the distributed side must reproduce. An edge with an
+    * endpoint outside the vertex set connects nothing. */
+  private def propagate(edges: Seq[(Long, Long)], vertices: Seq[Long]): Map[Long, Long] = {
+    val in = vertices.toSet
+    val adj = edges.filter { case (a, b) => in(a) && in(b) }
+      .flatMap { case (a, b) => Seq(a -> b, b -> a) }.groupMap(_._1)(_._2)
+    var label = vertices.map(v => v -> v).toMap
+    var changed = true
+    while (changed) {
+      val next = label.map { case (v, l) => v -> (l +: adj.getOrElse(v, Nil).map(label)).min }
+      changed = next != label
+      label = next
+    }
+    label
+  }
+
+  private def star(edges: Seq[(Long, Long)], vertices: Seq[Long]): (Map[Long, Long], Int) = {
+    val (labels, rounds) = Components.starComponents(
+      edges.toDF("a", "b"), vertices.toDF("v"), maxIters = 50)
+    (labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap, rounds)
+  }
+
   test("chain longer than one hop converges to the global min label") {
-    // diameter 4: the min must propagate hop by hop across iterations
+    // diameter 4: the min must reach the far end
     val got = comps(Seq((5L, 4L), (4L, 3L), (3L, 2L), (2L, 1L)), 1L to 5L)
     assert(got === (1L to 5L).map(_ -> 1L).toMap)
   }
@@ -49,11 +71,8 @@ class ComponentsSpec extends SparkSpec {
       // adversarial 200-node chain: label propagation needs ~200 rounds
       ((1L until 200L).map(i => (i, i + 1L)), (1L to 200L).toSeq))
     cases.foreach { case (es, vs) =>
-      val (starLabels, rounds) = Components.connectedComponentsStar(
-        es.toDF("a", "b"), vs.toDF("v"))
-      val star = starLabels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      // propagation needs diameter-many rounds on the chain — give it 250
-      assert(star === comps(es, vs, maxIters = 250), s"star != propagation on $es")
+      val (labels, rounds) = star(es, vs)
+      assert(labels === propagate(es, vs), s"star != propagation on $es")
       assert(rounds <= 12, s"star contraction took $rounds rounds (expected O(log n))")
     }
   }
@@ -66,34 +85,22 @@ class ComponentsSpec extends SparkSpec {
         i <- 1 to n; j <- (i + 1) to n if rnd.nextDouble() < 2.0 / n
       } yield (i.toLong, j.toLong)
       val vs = (1L to n.toLong).toSeq
-      val (starLabels, _) = Components.connectedComponentsStar(es.toDF("a", "b"), vs.toDF("v"))
-      val star = starLabels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(star === comps(es, vs, maxIters = 250), s"mismatch on n=$n, |E|=${es.size}")
+      assert(star(es, vs)._1 === propagate(es, vs), s"mismatch on n=$n, |E|=${es.size}")
     }
   }
 
   test("non-convergence at maxIters fails loudly instead of returning wrong labels") {
-    // diameter-4 chain, one iteration allowed: the min cannot reach the
-    // far end, so partial labels would be silently wrong — both variants
-    // must throw rather than return them
-    val es = Seq((5L, 4L), (4L, 3L), (3L, 2L), (2L, 1L))
+    // a 200-node chain, one star-contraction round allowed: labels read
+    // off a non-fixpoint edge set would be silently wrong, so the
+    // distributed side (cap 0) must throw rather than return them
+    val chain = (1L until 200L).map(i => (i, i + 1L))
     val ex = intercept[IllegalStateException] {
-      // localMaxRows = 0: the maxIters contract belongs to the
-      // DISTRIBUTED loop — the r16 union-find fast path has no
-      // iteration bound to trip (it always converges), so force the
-      // loop to pin its failure mode
-      Components.connectedComponents(es.toDF("a", "b"), (1L to 5L).toDF("v"),
+      Components.connectedComponents(chain.toDF("a", "b"), (1L to 200L).toDF("v"),
         maxIters = 1, localMaxRows = 0L)
     }
     assert(ex.getMessage.contains("did not converge"))
-    val ex2 = intercept[IllegalStateException] {
-      Components.connectedComponentsStar(
-        (1L until 200L).map(i => (i, i + 1L)).toDF("a", "b"),
-        (1L to 200L).toDF("v"), maxIters = 1)
-    }
-    assert(ex2.getMessage.contains("did not converge"))
-    // the same graphs converge fine under the default bound
-    assert(comps(es, 1L to 5L) === (1L to 5L).map(_ -> 1L).toMap)
+    // the same graph converges fine under the default bound
+    assert(comps(chain, 1L to 200L) === (1L to 200L).map(_ -> 1L).toMap)
   }
 
   test("rareGramEdges -> components on the corpus: labels form a valid partition") {
@@ -189,18 +196,19 @@ class ComponentsSpec extends SparkSpec {
   test("driver union-find fast path == distributed propagation (r16): fixed, randomized, and out-of-vertex-set edges") {
     def both(es: Seq[(Long, Long)], vs: Seq[Long]): Unit = {
       def run(cap: Long) = Components.connectedComponents(
-          es.toDF("a", "b"), vs.toDF("v"), maxIters = 500, localMaxRows = cap)
+          es.toDF("a", "b"), vs.toDF("v"), localMaxRows = cap)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val local = run(Components.LocalCcMaxRows) // fast path (graphs are tiny)
-      val dist = run(0L)                         // cap 0 disables → propagation loop
+      val local = run(LocalGraph.MaxRows) // fast path (graphs are tiny)
+      val dist = run(0L)                  // cap 0 disables → star contraction
       assert(local === dist, s"local != distributed on edges=$es vertices=$vs")
+      assert(local === propagate(es, vs), s"local != propagation on edges=$es vertices=$vs")
     }
     // fixed topologies: chain, star+cycle, isolated vertices
     both(Seq((5L, 4L), (4L, 3L), (3L, 2L), (2L, 1L)), 1L to 5L)
     both((2L to 6L).map(x => (1L, x)) ++ Seq((20L, 21L), (21L, 22L), (22L, 20L)),
       (1L to 6L) ++ (20L to 22L))
     // an edge touching a vertex OUTSIDE the seeded set must not connect
-    // through it on either path (the propagation loop never labels it)
+    // through it on either path
     both(Seq((1L, 500L), (500L, 2L)), Seq(1L, 2L))
     // randomized graphs, fixed seed
     val rnd = new scala.util.Random(0xE5C0)
@@ -211,5 +219,66 @@ class ComponentsSpec extends SparkSpec {
         .filter { case (a, b) => a != b }
       both(es, vs)
     }
+  }
+
+  test("driver union-find == star contraction at caps 0, |V|+|E|-1, |V|+|E| and unbounded: fixed, random and dirty graphs") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    // equal rows AND an equal schema on both sides of the gate, at the
+    // caps around |V| + |E| (cap 0 and |V|+|E|-1: star contraction;
+    // |V|+|E| and unbounded: driver union-find)
+    def both(es: DataFrame, vs: DataFrame, what: String): Unit = {
+      val n = vs.count() + es.count()
+      assert(LocalGraph.takeGraphUnder(vs, es, n).isDefined, s"$what: local at cap $n")
+      assert(LocalGraph.takeGraphUnder(vs, es, n - 1).isEmpty, s"$what: star at cap ${n - 1}")
+      def run(cap: Long) = {
+        val out = Components.connectedComponents(es, vs, localMaxRows = cap)
+        (out.schema, out.collect().toSeq.sortBy(_.toString))
+      }
+      val star = run(0L)
+      assert(star._1 === StructType(Seq(
+        StructField("v", LongType), StructField("component", LongType))), s"$what: schema")
+      Seq(n - 1, n, Long.MaxValue).foreach { cap =>
+        assert(run(cap) === star, s"$what: cap $cap != cap 0")
+      }
+    }
+    def longs(es: Seq[(Long, Long)], vs: Seq[Long], what: String): Unit =
+      both(es.toDF("a", "b"), vs.toDF("v"), what)
+    // fixed topologies: chain, disjoint + isolated, star + cycle, direction
+    longs(Seq((5L, 4L), (4L, 3L), (3L, 2L), (2L, 1L)), 1L to 5L, "chain")
+    longs(Seq((1L, 2L), (2L, 3L), (10L, 11L)), Seq(1L, 2L, 3L, 10L, 11L, 99L), "disjoint")
+    longs((2L to 6L).map(x => (1L, x)) ++ Seq((20L, 21L), (21L, 22L), (22L, 20L)),
+      (1L to 6L) ++ (20L to 22L), "star+cycle")
+    longs(Seq((1L, 9L), (9L, 2L)), Seq(1L, 2L, 9L), "direction")
+    // no edges: local at cap |V| exactly (the edge take has 0 rows left)
+    longs(Seq.empty, Seq(3L, 1L, 2L), "edgeless")
+    // adversarial 200-node chain
+    longs((1L until 200L).map(i => (i, i + 1L)), 1L to 200L, "chain200")
+    // seeded Erdős–Rényi graphs
+    val er = new scala.util.Random(42)
+    (1 to 5).foreach { k =>
+      val n = 30 + er.nextInt(40)
+      val es = for {
+        i <- 1 to n; j <- (i + 1) to n if er.nextDouble() < 2.0 / n
+      } yield (i.toLong, j.toLong)
+      longs(es, 1L to n.toLong, s"erdos-renyi $k (n=$n, |E|=${es.size})")
+    }
+    // random multigraphs: duplicate, antiparallel and self-loop edges
+    val rnd = new scala.util.Random(0xE5C0)
+    (1 to 3).foreach { k =>
+      val n = 60 + rnd.nextInt(60)
+      val es = Seq.fill(n)((1L + rnd.nextInt(n).toLong, 1L + rnd.nextInt(n).toLong))
+      longs(es, 1L to n.toLong, s"random $k (n=$n)")
+    }
+    // dirty inputs
+    longs(Seq((1L, 2L), (2L, 1L), (1L, 2L), (3L, 3L), (2L, 3L), (4L, 4L)),
+      Seq(1L, 2L, 3L, 4L), "duplicate, antiparallel and self-loop edges")
+    // an edge touching a vertex OUTSIDE the vertex set connects nothing
+    longs(Seq((1L, 500L), (500L, 2L)), Seq(1L, 2L), "out-of-set endpoint")
+    both(Seq((1, 2), (2, 3), (7, 8), (8, 8)).toDF("a", "b"),
+      Seq(1, 2, 3, 7, 8, 9).toDF("v"), "INT ids")
+    both(Seq((Some(1L), Some(2L)), (Some(2L), None), (None, Some(3L)), (None, None))
+        .toDF("a", "b"),
+      Seq(Some(1L), None, Some(2L), Some(3L), None).toDF("v"), "null ids")
   }
 }

@@ -166,12 +166,12 @@ class ErLifecycleSpec extends SparkSpec {
   }
 
   test("a lazy checkpoint keeps its plan's metrics past the job that materializes it") {
-    import graft.operators.Components
+    import graft.pipeline.TempDirs
     // the checkpointed plan itself is unreachable once this returns
     def checkpointed() = {
       val df = spark.range(0, 1000, 1, 4).groupBy((col("id") % 7).as("k")).count()
-      val cp = Components.lazyCheckpoint(df)
-      (cp, Components.planMetrics(df).map(new java.lang.ref.WeakReference(_)))
+      val cp = TempDirs.lazyCheckpoint(df)
+      (cp, TempDirs.planMetrics(df).map(new java.lang.ref.WeakReference(_)))
     }
     val (cp, metrics) = checkpointed()
     // the first job over the checkpoint cuts its lineage; a second job
@@ -180,7 +180,7 @@ class ErLifecycleSpec extends SparkSpec {
     System.gc()
     val collected = metrics.count(_.get == null)
     assert(metrics.nonEmpty && collected == 0, s"$collected of ${metrics.size} metrics collected")
-    Components.dropCheckpoint(cp)
+    TempDirs.dropCheckpoint(cp)
   }
 
   test("a maintain + forget cycle loses no task metric updates") {
