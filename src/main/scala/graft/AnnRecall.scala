@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Similarity, VectorIndex}
+import graft.pipeline.TempDirs
 
 /** Recall-vs-nprobe curve for the PERSISTED IVF-PQ serving tier
   * (r14 verdict item 8): the q156/q161 serving path
@@ -41,51 +42,51 @@ object AnnRecall {
     val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     val base = "/root/testdata/sf0.1"
     val (dim, k, nQueries) = (64, 10, 50)
-    val vecs = Tables.embeddings(spark, base)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = vecs.count()
-    val cells = Similarity.codebookSize(n)
-    val queries = vecs.filter(col("vec_id") < nQueries)
-    val exact = Similarity.bruteForceTopK(vecs, queries, k)
-      .select("query_id", "neighbor_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
     val out = new StringBuilder
-    for (m <- Seq(4, 8, 16)) {
-      val dir = graft.pipeline.TempDirs.scoped(s"graft_annrecall_m${m}_")
-      VectorIndex.build(vecs, dir, trained = true)
-      VectorIndex.buildPq(spark, dir, m = m, c = 64, dim = dim,
-        trained = true, iters = 2)
-      val nprobes = if (m == 4) Seq(1, 2, 5, 10, 23) else Seq(1, 2, 5)
-      for (nprobe <- nprobes) {
-        def runAdc() = VectorIndex.pqTopKFromIndex(spark, dir, queries,
-          k = k, nprobe = nprobe, m = m, dim = dim)
-          .select("query_id", "neighbor_id").collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet
-        def runRefined() = VectorIndex.pqTopKRefined(spark, dir, queries, vecs,
-          k = k, rerank = 30, nprobe = nprobe, m = m, dim = dim)
-          .select("query_id", "neighbor_id").collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet
-        val adc = runAdc() // warm (plans compile outside the window)
-        val refined = runRefined()
-        def minWall(f: () => Unit): Double = (0 until 3).map { _ =>
-          System.gc()
-          val t0 = System.nanoTime()
-          f()
-          (System.nanoTime() - t0) / 1e9
-        }.min
-        val wAdc = minWall(() => runAdc())
-        val wRef = minWall(() => runRefined())
-        val rAdc = (exact intersect adc).size.toDouble / exact.size
-        val rRef = (exact intersect refined).size.toDouble / exact.size
-        val line = s"""{"nprobe":$nprobe,"cells":$cells,""" +
-          s""""adc_recall_at_$k":${f"$rAdc%.3f"},"adc_wall_s":${f"$wAdc%.3f"},""" +
-          s""""refined_recall_at_$k":${f"$rRef%.3f"},"refined_wall_s":${f"$wRef%.3f"},""" +
-          s""""n":$n,"m":$m,"rerank":30,"queries":$nQueries}"""
-        println(s"ANNRECALL $line")
-        out.append(line).append('\n')
+    TempDirs.staged { st =>
+      val vecs = st.cache(Tables.embeddings(spark, base))
+      val n = vecs.count()
+      val cells = Similarity.codebookSize(n)
+      val queries = vecs.filter(col("vec_id") < nQueries)
+      val exact = Similarity.bruteForceTopK(vecs, queries, k)
+        .select("query_id", "neighbor_id").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      for (m <- Seq(4, 8, 16)) {
+        val dir = TempDirs.scoped(s"graft_annrecall_m${m}_")
+        VectorIndex.build(vecs, dir, trained = true)
+        VectorIndex.buildPq(spark, dir, m = m, c = 64, dim = dim,
+          trained = true, iters = 2)
+        val nprobes = if (m == 4) Seq(1, 2, 5, 10, 23) else Seq(1, 2, 5)
+        for (nprobe <- nprobes) {
+          def runAdc() = VectorIndex.pqTopKFromIndex(spark, dir, queries,
+            k = k, nprobe = nprobe, m = m, dim = dim)
+            .select("query_id", "neighbor_id").collect()
+            .map(r => (r.getLong(0), r.getLong(1))).toSet
+          def runRefined() = VectorIndex.pqTopKRefined(spark, dir, queries, vecs,
+            k = k, rerank = 30, nprobe = nprobe, m = m, dim = dim)
+            .select("query_id", "neighbor_id").collect()
+            .map(r => (r.getLong(0), r.getLong(1))).toSet
+          val adc = runAdc() // warm (plans compile outside the window)
+          val refined = runRefined()
+          def minWall(f: () => Unit): Double = (0 until 3).map { _ =>
+            System.gc()
+            val t0 = System.nanoTime()
+            f()
+            (System.nanoTime() - t0) / 1e9
+          }.min
+          val wAdc = minWall(() => runAdc())
+          val wRef = minWall(() => runRefined())
+          val rAdc = (exact intersect adc).size.toDouble / exact.size
+          val rRef = (exact intersect refined).size.toDouble / exact.size
+          val line = s"""{"nprobe":$nprobe,"cells":$cells,""" +
+            s""""adc_recall_at_$k":${f"$rAdc%.3f"},"adc_wall_s":${f"$wAdc%.3f"},""" +
+            s""""refined_recall_at_$k":${f"$rRef%.3f"},"refined_wall_s":${f"$wRef%.3f"},""" +
+            s""""n":$n,"m":$m,"rerank":30,"queries":$nQueries}"""
+          println(s"ANNRECALL $line")
+          out.append(line).append('\n')
+        }
       }
     }
-    vecs.unpersist()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get("target"))
     java.nio.file.Files.write(
       java.nio.file.Paths.get("target/ann_recall.json"),

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.pipeline.TempDirs
+
 /** Deduplication operators for a large-scale training-data pipeline:
   * exact (hash-groupBy), MinHash+LSH, SimHash, and n-gram Jaccard.
   *
@@ -25,11 +27,12 @@ import org.apache.spark.sql.types._
   * `minhashCandidatesIncremental`, `decontaminateAgainst`,
   * `lshVerifiedJaccard`, `ngramJaccardPairs`, `ngramCosinePairs`,
   * `rareGramEdges`, `duplicateSpanPairs` and `maximalDuplicateSpans`
-  * persist their internal index (the banded LSH index / the gram
-  * table) at MEMORY_AND_DISK so one explode feeds every consumer —
-  * and RELEASE it before returning, by spilling the (small,
-  * df-capped) pair/span output to a JVM-scoped temp parquet
-  * ([[graft.pipeline.TempDirs.spillParquet]]). Callers therefore
+  * cache their internal index (the banded LSH index / the gram
+  * table) in a [[graft.pipeline.TempDirs.staged]] scope so one explode
+  * feeds every consumer, spill the (small, df-capped) pair/span output
+  * to a JVM-scoped temp parquet
+  * ([[graft.pipeline.TempDirs.spillParquet]]), and the scope releases
+  * the index when the call exits, however it exits. Callers therefore
   * never inherit a live cache block: registered queries have no
   * unpersist hook, and the round-10 bench measured 1.7× inflation
   * from exactly this accretion. The cost is the functions being
@@ -164,13 +167,13 @@ object Dedup {
     */
   def minhashCandidates(sigs: DataFrame, idCol: String, k: Int, bands: Int,
                         estThreshold: Double,
-                        bandHash: Seq[Column] => Column = XxBandHash): DataFrame = {
+                        bandHash: Seq[Column] => Column = XxBandHash): DataFrame =
+      TempDirs.staged { s =>
     // the banded index feeds BOTH sides of the candidate self-join;
-    // persisting it materializes the LSH index once (the standard
+    // caching it materializes the LSH index once (the standard
     // "build the index, then probe it" shape) instead of recomputing
     // the whole signature aggregation per side
-    val banded = bandedIndex(sigs, idCol, k, bands, bandHash)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val banded = s.cache(bandedIndex(sigs, idCol, k, bands, bandHash))
     val a = banded.select(col(idCol).as("a"), col("sig").as("sig_a"), col("band"), col("bh"))
     val b = banded.select(col(idCol).as("b"), col("sig").as("sig_b"), col("band"), col("bh"))
     val pairs = a.join(b, Seq("band", "bh"), "inner")
@@ -180,9 +183,7 @@ object Dedup {
       .filter(col("est_jaccard") >= estThreshold)
     // spill-and-release (TempDirs.spillParquet contract): the banded
     // index must not outlive the call into a registered query
-    val out = graft.pipeline.TempDirs.spillParquet(pairs, "graft_lsh_pairs_")
-    banded.unpersist()
-    out
+    TempDirs.spillParquet(pairs, "graft_lsh_pairs_")
   }
 
   /** INCREMENTAL near-dup candidates — the shard-arrival path: pairs
@@ -199,9 +200,9 @@ object Dedup {
   def minhashCandidatesIncremental(newSigs: DataFrame, index: DataFrame,
                                    idCol: String, k: Int, bands: Int,
                                    estThreshold: Double,
-                                   bandHash: Seq[Column] => Column = XxBandHash): DataFrame = {
-    val newBanded = bandedIndex(newSigs, idCol, k, bands, bandHash)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+                                   bandHash: Seq[Column] => Column = XxBandHash): DataFrame =
+      TempDirs.staged { s =>
+    val newBanded = s.cache(bandedIndex(newSigs, idCol, k, bands, bandHash))
     val (crossShard, withinShard) = incrementalHalves(newBanded, index, idCol)
     val pairs = crossShard.unionByName(withinShard)
       .select(least(col("a"), col("b")).as("pa"),
@@ -209,9 +210,7 @@ object Dedup {
       .select(col("pa").as("a"), col("pb").as("b"), col("est_jaccard"))
       .distinct()
       .filter(col("est_jaccard") >= estThreshold)
-    val out = graft.pipeline.TempDirs.spillParquet(pairs, "graft_lsh_inc_pairs_")
-    newBanded.unpersist()
-    out
+    TempDirs.spillParquet(pairs, "graft_lsh_inc_pairs_")
   }
 
   /** CROSS-CORPUS decontamination at scale: drop every corpus document
@@ -230,12 +229,12 @@ object Dedup {
                            idCol: String, textCol: String,
                            shingleN: Int = 3, k: Int = 16, bands: Int = 8,
                            estThreshold: Double = 0.2,
-                           bandHash: Seq[Column] => Column = XxBandHash): DataFrame = {
+                           bandHash: Seq[Column] => Column = XxBandHash): DataFrame =
+      TempDirs.staged { s =>
     def banded(df: DataFrame) = bandedIndex(
       minhashSignaturesAffine(df, idCol, textCol, shingleN, k),
       idCol, k, bands, bandHash)
-    val refIndex = banded(reference)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val refIndex = s.cache(banded(reference))
     // NOT incrementalHalves: its cross half drops `a === b` self-pairs,
     // which is correct for shard-vs-corpus (same id space) but here the
     // two sides are DIFFERENT corpora whose ids may coincide by accident
@@ -252,10 +251,9 @@ object Dedup {
       .filter(col("est_jaccard") >= estThreshold)
       .select(idCol).distinct()
     // spill the FLAGGED id set (small — contamination hits only), not
-    // the corpus-sized survivor frame, then release the banded
-    // reference index; the returned anti-join stays lazy/corpus-linear
-    val flaggedIds = graft.pipeline.TempDirs.spillParquet(flagged, "graft_decontam_ids_")
-    refIndex.unpersist()
+    // the corpus-sized survivor frame; the returned anti-join stays
+    // lazy/corpus-linear and reads no staged relation
+    val flaggedIds = TempDirs.spillParquet(flagged, "graft_decontam_ids_")
     corpus.join(flaggedIds, Seq(idCol), "left_anti")
   }
 
@@ -379,17 +377,17 @@ object Dedup {
                          estThreshold: Double, threshold: Double,
                          seededHash: (Int, Column) => Column = XxSeededHash,
                          bandHash: Seq[Column] => Column = XxBandHash,
-                         affine: Boolean = false): DataFrame = {
+                         affine: Boolean = false): DataFrame =
+      TempDirs.staged { s =>
     val sigs =
       if (affine) minhashSignaturesAffine(df, idCol, textCol, n, k)
       else minhashSignatures(df, idCol, textCol, n, k, seededHash)
     val cand = minhashCandidates(sigs, idCol, k, bands, estThreshold, bandHash)
       .select(col("a"), col("b"))
-    // the gram table feeds sizes AND both intersection joins — persist
+    // the gram table feeds sizes AND both intersection joins — cache
     // the one explode instead of shingling the corpus three times;
     // hashed grams (output carries only pair scores)
-    val g = hashedShingles(df, idCol, textCol, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val g = s.cache(hashedShingles(df, idCol, textCol, n))
     val sizes = g.groupBy(col(idCol)).agg(count(lit(1)).as("n_grams"))
     val inter = cand
       .join(g.select(col(idCol).as("a"), col("gram")), Seq("a"))
@@ -401,9 +399,7 @@ object Dedup {
       .select(col("a"), col("b"),
         (col("inter").cast(DoubleType) / (col("na") + col("nb") - col("inter"))).as("jaccard"))
       .filter(col("jaccard") >= threshold)
-    val out = graft.pipeline.TempDirs.spillParquet(verified, "graft_lsh_verified_")
-    g.unpersist()
-    out
+    TempDirs.spillParquet(verified, "graft_lsh_verified_")
   }
 
   /** Exact n-gram Jaccard for all pairs sharing ≥1 gram, thresholded.
@@ -422,8 +418,7 @@ object Dedup {
     * pair shuffle — that trade is the 100 TB design. */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                         n: Int, threshold: Double,
-                        maxGramDf: Long = 1000L,
-                        persistGrams: Boolean = true): DataFrame = {
+                        maxGramDf: Long = 1000L): DataFrame = TempDirs.staged { s =>
     // the gram table feeds sizes, the df histogram AND both self-join
     // sides — one explode, materialized, instead of four. Measured at
     // sf0.1/local[32] (3 reps): persist 2.29 s vs recompute 2.34 s —
@@ -431,10 +426,7 @@ object Dedup {
     // machine noise); kept because at 100 TB recomputing the explode
     // four times dwarfs one serialization pass. Grams travel hashed —
     // the output is (a, b, jaccard), gram values never leave.
-    val g0 = hashedShingles(df, idCol, textCol, n)
-    val g = if (persistGrams)
-      g0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else g0
+    val g = s.cache(hashedShingles(df, idCol, textCol, n))
     val sizes = g.groupBy(col(idCol)).agg(count(lit(1)).as("n_grams"))
     val kept = g.join(
       g.groupBy("gram").agg(count(lit(1)).as("gram_df"))
@@ -451,12 +443,7 @@ object Dedup {
       .select(col("a"), col("b"),
         (col("inter").cast(DoubleType) / (col("na") + col("nb") - col("inter"))).as("jaccard"))
       .filter(col("jaccard") >= threshold)
-    if (!persistGrams) pairs
-    else {
-      val out = graft.pipeline.TempDirs.spillParquet(pairs, "graft_ngram_jaccard_")
-      g.unpersist()
-      out
-    }
+    TempDirs.spillParquet(pairs, "graft_ngram_jaccard_")
   }
 
   /** Exact Jaccard similarity self-join by PREFIX FILTERING (the
@@ -489,14 +476,10 @@ object Dedup {
     * the same sets — at 100 TB you'd swap in [[hashedShingles]] and
     * accept the 2⁻⁶⁴ collision odds. */
   def prefixJaccardJoin(df: DataFrame, idCol: String, textCol: String,
-                        n: Int, tNum: Long, tDen: Long,
-                        persistGrams: Boolean = true): DataFrame = {
+                        n: Int, tNum: Long, tDen: Long): DataFrame = TempDirs.staged { s =>
     require(tNum > 0 && tNum <= tDen, s"threshold $tNum/$tDen not in (0, 1]")
     import org.apache.spark.sql.expressions.Window
-    val g0 = shingles(df, idCol, textCol, n)
-    val g = if (persistGrams)
-      g0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else g0
+    val g = s.cache(shingles(df, idCol, textCol, n))
     val sizes = g.groupBy(col(idCol)).agg(count(lit(1)).as("sz"))
     val dfreq = g.groupBy("gram").agg(count(lit(1)).as("gdf"))
     val w = Window.partitionBy(idCol).orderBy(col("gdf"), col("gram"))
@@ -524,12 +507,7 @@ object Dedup {
       .select(col("a").as("doc_a"), col("b").as("doc_b"), col("inter"),
         (col("sza") + col("szb") - col("inter")).as("un"))
       .filter(col("inter") * tDen >= col("un") * tNum)
-    if (!persistGrams) pairs
-    else {
-      val out = graft.pipeline.TempDirs.spillParquet(pairs, "graft_prefix_jaccard_")
-      g.unpersist()
-      out
-    }
+    TempDirs.spillParquet(pairs, "graft_prefix_jaccard_")
   }
 
   /** Per-document n-gram term frequencies — [[shingles]] WITH
@@ -557,18 +535,14 @@ object Dedup {
     * k docs contributes k² join rows, so grams in more than
     * `maxGramDf` docs are dropped from the DOT PRODUCT only — norms
     * keep every gram, so hot-gram pairs underestimate identically in
-    * engine and oracle. The tf table is persisted once (caller-owned
-    * lifecycle, see the object doc) because it feeds the norms, the df
-    * histogram and both self-join sides. */
+    * engine and oracle. The tf table is cached once (see the object
+    * doc) because it feeds the norms, the df histogram and both
+    * self-join sides. */
   def ngramCosinePairs(df: DataFrame, idCol: String, textCol: String,
                        n: Int, threshold: Double,
-                       maxGramDf: Long = 1000L,
-                       persistTf: Boolean = true): DataFrame = {
+                       maxGramDf: Long = 1000L): DataFrame = TempDirs.staged { s =>
     // hashed gram identities — the output is (a, b, cosine) only
-    val tf0 = hashedGramCounts(df, idCol, textCol, n)
-    val tf = if (persistTf)
-      tf0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else tf0
+    val tf = s.cache(hashedGramCounts(df, idCol, textCol, n))
     val norms = tf.groupBy(col(idCol)).agg(sum(col("tf") * col("tf")).as("ss"))
     val kept = tf.join(
       tf.groupBy("gram").agg(count(lit(1)).as("gram_df"))
@@ -588,12 +562,7 @@ object Dedup {
           (sqrt(col("ss_a").cast(DoubleType)) * sqrt(col("ss_b").cast(DoubleType))))
           .as("cosine"))
       .filter(col("cosine") >= threshold)
-    if (!persistTf) pairs
-    else {
-      val out = graft.pipeline.TempDirs.spillParquet(pairs, "graft_ngram_cosine_")
-      tf.unpersist()
-      out
-    }
+    TempDirs.spillParquet(pairs, "graft_ngram_cosine_")
   }
 
   /** Boilerplate-segment removal (the CCNet/RefinedWeb line-dedup shape
@@ -719,10 +688,9 @@ object Dedup {
     * agreements, the same tolerance every hash-based candidate
     * generator here (MinHash/SimHash/winnowing) already accepts. */
   def rareGramEdges(df: DataFrame, idCol: String, textCol: String, n: Int,
-                    maxDf: Long, minShared: Long): DataFrame = {
+                    maxDf: Long, minShared: Long): DataFrame = TempDirs.staged { s =>
     // one explode feeds the df histogram and both self-join sides
-    val g = hashedShingles(df, idCol, textCol, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val g = s.cache(hashedShingles(df, idCol, textCol, n))
     val rare = g.join(
       g.groupBy("gram").agg(count(lit(1)).as("gram_df"))
         .filter(col("gram_df").between(2, maxDf))
@@ -737,9 +705,7 @@ object Dedup {
     // spill-and-release (TempDirs.spillParquet contract): six registered
     // queries feed this edge set straight into the components loop; the
     // gram cache must not outlive the call (edges are df-capped — tiny)
-    val out = graft.pipeline.TempDirs.spillParquet(edges, "graft_rare_edges_")
-    g.unpersist()
-    out
+    TempDirs.spillParquet(edges, "graft_rare_edges_")
   }
 
   /** Winnowing fingerprints (Schleimer/Wilkerson/Aiken, SIGMOD'03 — the
@@ -799,9 +765,9 @@ object Dedup {
   def duplicateSpanPairs(df: DataFrame, idCol: String, textCol: String,
                          k: Int = 8, w: Int = 12,
                          maxDf: Long = 50L, minShared: Long = 2L,
-                         gramHash: Column => Column = c => xxhash64(c)): DataFrame = {
-    val f = winnowingFingerprints(df, idCol, textCol, k, w, gramHash)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+                         gramHash: Column => Column = c => xxhash64(c)): DataFrame =
+      TempDirs.staged { s =>
+    val f = s.cache(winnowingFingerprints(df, idCol, textCol, k, w, gramHash))
     val kept = f.join(
       f.groupBy("fp").agg(count(lit(1)).as("fp_df"))
         .filter(col("fp_df").between(2, maxDf))
@@ -812,9 +778,7 @@ object Dedup {
       .filter(col("a") < col("b"))
       .groupBy("a", "b").agg(count(lit(1)).as("shared"))
       .filter(col("shared") >= minShared)
-    val out = graft.pipeline.TempDirs.spillParquet(pairs, "graft_span_pairs_")
-    f.unpersist()
-    out
+    TempDirs.spillParquet(pairs, "graft_span_pairs_")
   }
 
   /** MAXIMAL duplicated token spans between document pairs — the
@@ -846,7 +810,7 @@ object Dedup {
     * span_tokens ≥ `minSpanTokens`. */
   def maximalDuplicateSpans(df: DataFrame, idCol: String, textCol: String,
                             n: Int = 5, maxDf: Long = 100L,
-                            minSpanTokens: Int = 8): DataFrame = {
+                            minSpanTokens: Int = 8): DataFrame = TempDirs.staged { s =>
     val toks = Text.tokens(col(textCol))
     // grams travel as xxhash64 longs (the rareGramEdges discipline):
     // the df histogram and the positional self-join shuffle 8 bytes per
@@ -864,10 +828,9 @@ object Dedup {
           i => struct(i.cast(LongType).as("pos"),
             xxhash64((0 until n).map(j => element_at(t, i + j)): _*).as("gram")))),
       1)
-    val pg = df.filter(size(Text.tokens(col(textCol))) >= n)
+    val pg = s.cache(df.filter(size(Text.tokens(col(textCol))) >= n)
       .select(col(idCol), explode(grams).as("pg"))
-      .select(col(idCol), col("pg.pos").as("pos"), col("pg.gram").as("gram"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col(idCol), col("pg.pos").as("pos"), col("pg.gram").as("gram")))
     val kept = pg.join(
       pg.groupBy("gram").agg(count(lit(1)).as("gram_df"))
         .filter(col("gram_df").between(2, maxDf))
@@ -889,9 +852,7 @@ object Dedup {
       .select("a", "b", "start_a", "start_b", "span_tokens")
     // spill-and-release: spans are the df-capped pair islands (small);
     // the positional-gram cache must not outlive the call
-    val out = graft.pipeline.TempDirs.spillParquet(spans, "graft_dup_spans_")
-    pg.unpersist()
-    out
+    TempDirs.spillParquet(spans, "graft_dup_spans_")
   }
 
   /** Span-dedup APPLY — the Lee et al. 2022 ExactSubstr REMOVAL step

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.pipeline.TempDirs
+
 /** Multimodal-column plumbing: media payloads are opaque `binary`
   * columns with a typed metadata struct, processed batch-at-a-time in
   * `mapPartitions` (the Scala analogue of `mapInPandas` batch shape).
@@ -196,9 +198,8 @@ object Multimodal {
     * self-join), every join is a banded equi-join on the signature —
     * never O(n²) in docs. */
   def videoNearDupPairs(frames: DataFrame, minShared: Long = 2,
-                        maxDf: Long = 100): DataFrame = {
-    val d = frames.select(col("doc_id"), col("fhash")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+                        maxDf: Long = 100): DataFrame = TempDirs.staged { s =>
+    val d = s.cache(frames.select(col("doc_id"), col("fhash")).distinct())
     val kept = d.join(
       d.groupBy("fhash").agg(count(lit(1)).as("frame_df"))
         .filter(col("frame_df").between(2, maxDf))
@@ -210,9 +211,7 @@ object Multimodal {
       .groupBy("a", "b").agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
     // spill-and-release (TempDirs.spillParquet contract)
-    val out = graft.pipeline.TempDirs.spillParquet(pairs, "graft_video_pairs_")
-    d.unpersist()
-    out
+    TempDirs.spillParquet(pairs, "graft_video_pairs_")
   }
 
   /** Audio-style ALIGNMENT matching over frame signatures — the Shazam
@@ -231,9 +230,8 @@ object Multimodal {
     * own offsets, input = matched-frame rows, never O(n²) in docs).
     * The vote is pure integer arithmetic — fully oracle-replayable. */
   def alignedMatchPairs(frames: DataFrame, minVotes: Long = 2,
-                        maxDf: Long = 100): DataFrame = {
-    val d = frames.select(col("doc_id"), col("frame_idx"), col("fhash"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+                        maxDf: Long = 100): DataFrame = TempDirs.staged { s =>
+    val d = s.cache(frames.select(col("doc_id"), col("frame_idx"), col("fhash")))
     val kept = d.join(
       d.select(col("doc_id"), col("fhash")).distinct()
         .groupBy("fhash").agg(count(lit(1)).as("frame_df"))
@@ -252,9 +250,7 @@ object Multimodal {
       .filter(col("rn") === 1 && col("votes") >= minVotes)
       .select(col("a"), col("b"), col("shift").cast("long").as("best_shift"), col("votes"))
     // spill-and-release (TempDirs.spillParquet contract)
-    val out = graft.pipeline.TempDirs.spillParquet(best, "graft_aligned_pairs_")
-    d.unpersist()
-    out
+    TempDirs.spillParquet(best, "graft_aligned_pairs_")
   }
 
   /** Frame-sampling metadata: every `stride`-th byte offset as a fake

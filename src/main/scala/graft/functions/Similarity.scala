@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.operators.Relational
+import graft.pipeline.TempDirs
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -502,7 +503,7 @@ object Similarity {
     * scheduling overhead. Same output shape as [[pqCodebooks]] —
     * drop-in for the assign/ADC passes. */
   def pqCodebooksTrained(vectors: DataFrame, m: Int, c: Int, dim: Int,
-                         iters: Int = 1): DataFrame = {
+                         iters: Int = 1): DataFrame = TempDirs.staged { s =>
     require(dim % m == 0, s"dim $dim must split into m=$m equal blocks")
     val spark = vectors.sparkSession
     val subDim = dim / m
@@ -516,9 +517,8 @@ object Similarity {
     // of q108's 8.6 s at sf0.1). One tiny shuffle of the bounded sample
     // spreads the expansion across the cluster; hash partitioning by
     // vec_id keeps per-run determinism (fixed row order per partition).
-    val blocks = explodeBlocks(sample.repartition(col("vec_id")),
-      "vec_id", "embedding", m, dim)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val blocks = s.cache(explodeBlocks(sample.repartition(col("vec_id")),
+      "vec_id", "embedding", m, dim))
     var books = pqCodebooks(sample, m, c, dim)
     for (_ <- 0 until iters) {
       val assigned = blocks.join(broadcast(books), Seq("block"))
@@ -538,7 +538,6 @@ object Similarity {
       books = spark.createDataFrame(
         java.util.Arrays.asList(next.collect(): _*), next.schema)
     }
-    blocks.unpersist(false)
     books
   }
 
@@ -625,20 +624,19 @@ object Similarity {
     * both halves' exact passes are oracled (q52 assign, q99 codes). */
   def ivfPqTopK(vectors: DataFrame, cents: DataFrame, queries: DataFrame,
                 k: Int, nprobe: Int, m: Int, c: Int, dim: Int,
-                iters: Int = 1): DataFrame = {
+                iters: Int = 1): DataFrame = TempDirs.staged { s =>
     val subDim = dim / m
     def resid(e: Column, ce: Column): Column = zip_with(e, ce, (x, y) => x - y)
     val cbs = cents.select(col("centroid_id"), col("c_emb"))
     val assigned = l2Assign(vectors, cents)
     // materialize the residuals ONCE: three consumers (the PQ training
     // sample collect, the encode pass, and the cell join) would each
-    // re-run the full IVF assign otherwise. Released before return via
-    // the spill-and-release at the bottom — this operator feeds a
+    // re-run the full IVF assign otherwise. The scope releases them
+    // once the result below is spilled — this operator feeds a
     // registered query, which has no unpersist hook
-    val residDf = assigned.join(broadcast(cbs), Seq("centroid_id"))
+    val residDf = s.cache(assigned.join(broadcast(cbs), Seq("centroid_id"))
       .select(col("vec_id"), col("centroid_id"),
-        resid(col("embedding"), col("c_emb")).as("embedding"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        resid(col("embedding"), col("c_emb")).as("embedding")))
     val books = pqCodebooksTrained(
       residDf.select(col("vec_id"), col("embedding")), m, c, dim, iters)
     val codes = pqAssign(residDf.select("vec_id", "embedding"), books, m, dim)
@@ -673,24 +671,23 @@ object Similarity {
     // spill-and-release (TempDirs.spillParquet contract): the top-k
     // result is k rows per query — tiny next to the residual cache,
     // which must not outlive this call into a registered query
-    val out = graft.pipeline.TempDirs.spillParquet(top, "graft_ivfpq_topk_")
-    residDf.unpersist()
-    out
+    TempDirs.spillParquet(top, "graft_ivfpq_topk_")
   }
 
   /** Embedding-cosine near-duplicate pairs via the IVF buckets: only
     * vectors sharing a centroid are compared (equi-join on centroid_id,
     * not an O(n²) cross join), then thresholded.
     *
-    * Persist lifecycle: the assignment is persisted at MEMORY_AND_DISK
-    * to feed both self-join sides, and RELEASED before return — the
+    * Staging: the assignment is cached at MEMORY_AND_DISK to feed both
+    * self-join sides and released when the call exits — the
     * thresholded pair set is spilled to a JVM-scoped temp parquet
     * (TempDirs.spillParquet contract), so registered-query callers
     * never inherit a live cache block. */
-  def cosineNearDupPairs(assigned: DataFrame, threshold: Double): DataFrame = {
+  def cosineNearDupPairs(assigned: DataFrame, threshold: Double): DataFrame =
+      TempDirs.staged { s =>
     // the assignment feeds both sides of the self-join — materialize the
     // IVF index once instead of re-running the whole assign pass per side
-    val ix = assigned.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val ix = s.cache(assigned)
     val a = ix.select(col("centroid_id"), col("vec_id").as("a"),
       col("embedding").as("ea"), col("v_norm").as("na"))
     val b = ix.select(col("centroid_id"), col("vec_id").as("b"),
@@ -700,9 +697,7 @@ object Similarity {
       .select(col("a"), col("b"),
         (dot(col("ea"), col("eb")) / (col("na") * col("nb"))).as("cos_sim"))
       .filter(col("cos_sim") >= threshold)
-    val out = graft.pipeline.TempDirs.spillParquet(pairs, "graft_cosine_pairs_")
-    ix.unpersist()
-    out
+    TempDirs.spillParquet(pairs, "graft_cosine_pairs_")
   }
 
   /** MUTUAL nearest-neighbor pairs between two vector groups within
@@ -727,7 +722,7 @@ object Similarity {
     * are spec-pinned. A vector sharing no probed cell with the other
     * group yields no pair. */
   def mutualTopOne(a: DataFrame, b: DataFrame, cents: DataFrame,
-                   nprobe: Int = 2): DataFrame = {
+                   nprobe: Int = 2): DataFrame = TempDirs.staged { s =>
     require(nprobe >= 1, s"nprobe $nprobe must be >= 1")
     val cn = cents.select(col("centroid_id"), col("c_emb"),
       norm(col("c_emb")).as("c_norm"))
@@ -745,12 +740,11 @@ object Similarity {
         .select(col("centroid_id"), col("vec_id").as(idAs),
           col("embedding").as(embAs), col("v_norm").as(normAs))
     }
-    val scored = side(a, "a_id", "ea", "na")
+    val scored = s.cache(side(a, "a_id", "ea", "na")
       .join(side(b, "b_id", "eb", "nb"), Seq("centroid_id"), "inner")
       .select(col("a_id"), col("b_id"),
         (dot(col("ea"), col("eb")) / (col("na") * col("nb"))).as("cos_sim"))
-      .distinct() // a pair may share several probed cells
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .distinct()) // a pair may share several probed cells
     val bestForA = scored.groupBy(col("a_id"))
       .agg(max_by(struct(col("b_id"), col("cos_sim")),
         struct(col("cos_sim"), (-col("b_id")).as("nid"))).as("m"))
@@ -760,8 +754,6 @@ object Similarity {
         struct(col("cos_sim"), (-col("a_id")).as("nid"))).as("a_id"))
       .select(col("a_id"), col("b_id"))
     val mutual = bestForA.join(bestForB, Seq("a_id", "b_id"), "left_semi")
-    val out = graft.pipeline.TempDirs.spillParquet(mutual, "graft_mutual_nn_")
-    scored.unpersist()
-    out
+    TempDirs.spillParquet(mutual, "graft_mutual_nn_")
   }
 }

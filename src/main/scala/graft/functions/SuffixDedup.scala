@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-import graft.pipeline.TempDirs.LazyCheckpoint
+import graft.pipeline.TempDirs
 
 /** EXACT substring-duplication detection via distributed prefix
   * doubling — the suffix-array recipe behind Lee et al. 2022's
@@ -44,8 +44,8 @@ import graft.pipeline.TempDirs.LazyCheckpoint
   * order is dropped and hash partitioning suffices. Hot-window skew
   * (the stopword run) sits on the join, where AQE skew-split applies —
   * not on a window function that would pin a hot group to one task.
-  * Rounds localCheckpoint and the previous round's blocks drop (the
-  * Components loop discipline) — checkpointing rather than persisting
+  * Rounds localCheckpoint and the previous round's blocks are released
+  * (the Components loop discipline) — checkpointing rather than persisting
   * because each round references its parent TWICE, so an untruncated
   * logical plan doubles per round and its per-action string rendering
   * alone OOMs at the win=50 production window. The FINAL round is
@@ -78,7 +78,7 @@ object SuffixDedup {
     * (idCol, pos, label) with 1-based pos, one row per window that
     * fits, equal labels ⟺ token-identical windows. */
   def windowLabels(df: DataFrame, idCol: String, textCol: String,
-                   win: Int): DataFrame = {
+                   win: Int): DataFrame = TempDirs.staged { s =>
     require(win >= 1, s"window length $win must be >= 1")
     val toks = df.filter(col(textCol).isNotNull)
       .select(col(idCol), posexplode(Text.tokens(col(textCol))))
@@ -102,10 +102,9 @@ object SuffixDedup {
     // ExactSubstr production window (win=50, 6 rounds) the plan string
     // alone OOMed the driver heap (found by SuffixProbe, round 12).
     // localCheckpoint collapses each round to a LogicalRDD — the
-    // Components/PageRank loop discipline — and dropCheckpoint frees
-    // the parent round's blocks (Dataset.unpersist doesn't reach
-    // checkpoint RDDs).
-    var labels = relabel(toks, Seq("token")).localCheckpoint()
+    // Components/PageRank loop discipline — and the scope frees the
+    // parent round's blocks once the next round has materialized.
+    var labels = s.checkpoint(relabel(toks, Seq("token")), eager = true)
     var len = 1
     while (len < win) {
       val step = math.min(len, win - len)
@@ -114,12 +113,11 @@ object SuffixDedup {
       val paired = labels.join(shifted, Seq(idCol, "pos"))
       // lazy checkpoint; the count right below is the materializing
       // action, so each round runs ONE job (the Components rationale)
-      val next = relabel(
+      val next = s.checkpoint(relabel(
           paired.select(col(idCol), col("pos"), col("label"), col("label2")),
-          Seq("label", "label2"))
-        .lazyCheckpoint()
+          Seq("label", "label2")))
       next.count() // materialize before releasing the parent round
-      graft.pipeline.TempDirs.dropCheckpoint(labels)
+      s.release(labels)
       labels = next
       len += step
     }
@@ -135,9 +133,7 @@ object SuffixDedup {
     // the label table on durable storage once, derive both consumers
     // from the files. RegistrySpec tripwires the invariant (no
     // persisted RDDs survive any registered query's construction).
-    val out = graft.pipeline.TempDirs.spillParquet(labels, "graft_suffix_labels_")
-    graft.pipeline.TempDirs.dropCheckpoint(labels)
-    out
+    TempDirs.spillParquet(labels, "graft_suffix_labels_")
   }
 
   /** Duplicated length-`win` windows: every (doc, pos) whose window's

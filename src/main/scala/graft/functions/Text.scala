@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.pipeline.TempDirs.LazyCheckpoint
+import graft.pipeline.TempDirs
 
 /** Text-analysis functions for a training-data pipeline, built entirely
   * from codegen'd `org.apache.spark.sql.functions` (no UDFs): language
@@ -134,15 +134,15 @@ object Text {
     * stops early if the corpus runs out of adjacent pairs.
     */
   def bpeTrainMerges(docs: DataFrame, textCol: String,
-                     rounds: Int): Seq[(Int, String, String, Long)] = {
+                     rounds: Int): Seq[(Int, String, String, Long)] = TempDirs.staged { s =>
     require(rounds >= 1, "need at least one round")
     // LAZY checkpoints, one job per round: round k's top-pair collect is
     // the action that materializes round k−1's rewrite, and a round's
-    // blocks are dropped only AFTER the collect that consumed them (the
+    // blocks are released only AFTER the collect that consumed them (the
     // Components star-contraction discipline — dropping before the
     // dependent materializes would free blocks a truncated lineage
     // can't rebuild)
-    var toks = docs.select(bpeTokens(col(textCol)).as("t")).lazyCheckpoint()
+    var toks = s.checkpoint(docs.select(bpeTokens(col(textCol)).as("t")))
     var prev: DataFrame = null
     val merges = Seq.newBuilder[(Int, String, String, Long)]
     var r = 1
@@ -151,18 +151,16 @@ object Text {
       val top = toks.select(explode(adjacentPairs(col("t"))).as("pair"))
         .groupBy("pair").agg(count(lit(1)).as("n"))
         .orderBy(col("n").desc, col("pair")).limit(1).collect()
-      if (prev != null) { graft.pipeline.TempDirs.dropCheckpoint(prev); prev = null }
+      if (prev != null) { s.release(prev); prev = null }
       if (top.isEmpty) exhausted = true
       else {
         val Array(a, b) = top(0).getString(0).split(" ", 2)
         merges += ((r, a, b, top(0).getLong(1)))
         prev = toks
-        toks = toks.select(mergePair(col("t"), a, b).as("t")).lazyCheckpoint()
+        toks = s.checkpoint(toks.select(mergePair(col("t"), a, b).as("t")))
       }
       r += 1
     }
-    if (prev != null) graft.pipeline.TempDirs.dropCheckpoint(prev)
-    graft.pipeline.TempDirs.dropCheckpoint(toks)
     merges.result()
   }
 

@@ -3,6 +3,8 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.pipeline.TempDirs
+
 /** Unigram-LM subword segmentation — the SentencePiece half of the
   * tokenizer family (BPE trains by greedy pair-merging, q76/q105/q106/
   * q120; the unigram model segments each word into the BEST-scoring
@@ -50,24 +52,21 @@ object Unigram {
   /** Train the piece-cost table and collect it (bounded: ≤ topK +
     * alphabet size entries — the codebook-collect class). */
   def trainVocab(docs: DataFrame, idCol: String, textCol: String,
-                 topK: Int = 256): Map[String, Long] = {
+                 topK: Int = 256): Map[String, Long] = TempDirs.staged { st =>
     val wc = wordsOf(docs, idCol, textCol)
       .groupBy("w").agg(count(lit(1)).as("wc"))
-    val pieces = wc.select(col("wc"),
+    val pieces = st.cache(wc.select(col("wc"),
         explode(flatten(transform(
           sequence(lit(1), length(col("w"))),
           s => transform(
             sequence(lit(1), least(lit(MaxPieceLen), length(col("w")) - s + 1)),
             l => col("w").substr(s, l))))).as("piece"))
-      .groupBy("piece").agg(sum(col("wc")).as("freq"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .groupBy("piece").agg(sum(col("wc")).as("freq")))
     val top = pieces.orderBy(col("freq").desc, col("piece").asc).limit(topK)
     val singles = pieces.filter(length(col("piece")) === 1)
-    val vocab = top.unionByName(singles).distinct()
+    top.unionByName(singles).distinct()
       .select(col("piece"), (lit(64L) - length(bin(col("freq")))).as("cost"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    pieces.unpersist()
-    vocab
   }
 
   /** The packed-Viterbi column over word column `w`: cost·4096+pieces
@@ -184,10 +183,10 @@ object Unigram {
     * the "hard-EM" SentencePiece variant, and the lattice algebra is
     * shared verbatim with inference). */
   def emRound(docs: DataFrame, idCol: String, textCol: String,
-              vocab: Map[String, Long], topK: Int = 256): Map[String, Long] = {
-    val wc = wordsOf(docs, idCol, textCol)
-      .groupBy("w").agg(count(lit(1)).as("wc"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+              vocab: Map[String, Long], topK: Int = 256): Map[String, Long] =
+      TempDirs.staged { st =>
+    val wc = st.cache(wordsOf(docs, idCol, textCol)
+      .groupBy("w").agg(count(lit(1)).as("wc")))
     val counts = wc
       .select(col("wc"), explode(bestPieces(col("w"), vocab)).as("piece"))
       .groupBy("piece").agg(sum(col("wc")).as("cnt"))
@@ -197,11 +196,9 @@ object Unigram {
     val top = counts.orderBy(col("cnt").desc, col("piece").asc).limit(topK)
     val coverage = singles.join(counts, Seq("piece"), "left")
       .select(col("piece"), coalesce(col("cnt"), lit(0L)).as("cnt"))
-    val next = top.unionByName(coverage).distinct()
+    top.unionByName(coverage).distinct()
       .select(col("piece"), (lit(64L) - length(bin(col("cnt")))).as("cost"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    wc.unpersist()
-    next
   }
 
   /** SentencePiece-style trainer: the [[trainVocab]] frequency

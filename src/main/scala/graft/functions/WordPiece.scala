@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.pipeline.TempDirs
 import graft.plans.NativeExpressions
 
 /** WordPiece greedy longest-match-first subword encoding — the third
@@ -46,28 +47,26 @@ object WordPiece {
 
   /** Train the frequency vocab and collect it (bounded: ≤ topK +
     * single-char closure in both plain and `##` forms). */
-  def trainVocab(docs: DataFrame, textCol: String, topK: Int = 512): Seq[String] = {
+  def trainVocab(docs: DataFrame, textCol: String, topK: Int = 512): Seq[String] =
+      TempDirs.staged { st =>
     val wc = docs.filter(col(textCol).isNotNull)
       .select(explode(Text.tokens(col(textCol))).as("w"))
       .filter(length(col("w")) >= 1)
       .groupBy("w").agg(count(lit(1)).as("wc"))
-    val pieces = wc.select(col("wc"),
+    val pieces = st.cache(wc.select(col("wc"),
         explode(flatten(transform(
           sequence(lit(1), length(col("w"))),
           s => transform(
             sequence(lit(1), least(lit(MaxPieceLen), length(col("w")) - s + 1)),
             l => when(s === 1, col("w").substr(s, l))
               .otherwise(cont(col("w").substr(s, l))))))).as("piece"))
-      .groupBy("piece").agg(sum(col("wc")).as("freq"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .groupBy("piece").agg(sum(col("wc")).as("freq")))
     val top = pieces.orderBy(col("freq").desc, col("piece").asc).limit(topK)
     val singles = pieces.filter(
       (!col("piece").startsWith("##") && length(col("piece")) === 1) ||
         (col("piece").startsWith("##") && length(col("piece")) === 3))
-    val vocab = top.unionByName(singles).select("piece").distinct()
+    top.unionByName(singles).select("piece").distinct()
       .collect().map(_.getString(0)).toSeq.sorted
-    pieces.unpersist()
-    vocab
   }
 
   /** Encode every document: (idCol, word_pos, piece_ord, piece) —

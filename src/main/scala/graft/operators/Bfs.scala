@@ -55,17 +55,9 @@ object Bfs {
     // under the cap, collect and run the frontier loop on the driver;
     // same min-hop semantics (a vertex enters once, at its first
     // round), one job per side + one spill instead of ~3 jobs × rounds.
-    // type-mismatch guard (r16 advice): the local maps key on boxed
-    // values, while the distributed joins coerce numerics — a seed/edge
-    // endpoint type mismatch must fall through, not silently diverge
-    val localOk = {
-      val st = seed0.schema.head.dataType
-      val es = e.schema
-      st == es(0).dataType && st == es(1).dataType
-    }
-    if (localOk)
+    if (LocalGraph.sameIdType(seed0, e))
     for (sRows <- LocalGraph.collectUnder(seed0, localMaxRows);
-         eRows <- LocalGraph.collectUnder(e, localMaxRows - sRows.length)) {
+         eRows <- LocalGraph.collectAtMost(e, localMaxRows - sRows.length)) {
       val adj = new scala.collection.mutable.HashMap[Any,
         scala.collection.mutable.ArrayBuffer[Any]]
       eRows.foreach { r =>

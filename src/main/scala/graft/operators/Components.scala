@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, LongType, StructField, StructType}
 import graft.pipeline.TempDirs
-import graft.pipeline.TempDirs.LazyCheckpoint
 
 /** Connected components — the final stage of a dedup pipeline:
   * near-dup PAIRS (from LSH / SimHash / exact Jaccard) become CLUSTERS,
@@ -111,7 +110,7 @@ object Components {
     * the spec can assert the logarithmic convergence.
     */
   private[graft] def starComponents(es: DataFrame, vs: DataFrame,
-                                    maxIters: Int): (DataFrame, Int) = {
+                                    maxIters: Int): (DataFrame, Int) = TempDirs.staged { s =>
     def adj(e: DataFrame): DataFrame =
       e.select(col("a").as("u"), col("b").as("nb"))
         .union(e.select(col("b").as("u"), col("a").as("nb")))
@@ -169,13 +168,12 @@ object Components {
 
     // only edges between two vertices of `vs` connect anything (the
     // semi-joins also drop null endpoints, and the filter self-loops)
-    var e = es
+    var e = s.checkpoint(es
       .join(vs.select(col("v").as("a")), Seq("a"), "left_semi")
       .join(vs.select(col("v").as("b")), Seq("b"), "left_semi")
       .filter(col("a") =!= col("b"))
       .select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"))
-      .distinct()
-      .localCheckpoint()
+      .distinct(), eager = true)
     var fp = fingerprint(e)
     var rounds = 0
     var stable = false
@@ -187,11 +185,11 @@ object Components {
       // materialization buys nothing (measured +10 % at sf0.1 in round
       // 8, a wash re-measured in round 9 after the hashed-gram edge
       // build) and would add a block-lifecycle obligation per round.
-      val next = star(star(e, large = true), large = false).lazyCheckpoint()
+      val next = s.checkpoint(star(star(e, large = true), large = false))
       val nfp = fingerprint(next)
       stable = nfp == fp && sameEdges(next, e)
       fp = nfp
-      TempDirs.dropCheckpoint(e)
+      s.release(e)
       e = next
       rounds += 1
     }
@@ -206,9 +204,7 @@ object Components {
       .join(adj(e).groupBy(col("u").as("v")).agg(min("nb").as("nmin")), Seq("v"), "left")
       .select(col("v"), least(col("v"), coalesce(col("nmin"), col("v"))).as("component"))
     // spill-and-release: reading labels off the star forest is the last
-    // consumer of the checkpointed edge set — release it before return
-    val out = TempDirs.spillParquet(labels, "graft_components_")
-    TempDirs.dropCheckpoint(e)
-    (out, rounds)
+    // consumer of the checkpointed edge set, which the scope releases
+    (TempDirs.spillParquet(labels, "graft_components_"), rounds)
   }
 }

@@ -7,7 +7,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
 import graft.pipeline.TempDirs
-import graft.pipeline.TempDirs.LazyCheckpoint
 
 /** INCREMENTAL entity resolution — q228's block → match → canonicalize
   * pipeline maintained under customer ARRIVALS without re-matching the
@@ -533,8 +532,11 @@ object IncrementalEr {
     val desc = sc.getLocalProperty(Phases.JobDescription)
     val fs = tasks.map(t => scala.concurrent.Future {
       sc.setJobDescription(desc); t() }(writePool))
-    fs.foreach(scala.concurrent.Await.result(_,
-      scala.concurrent.duration.Duration.Inf))
+    // every write ends before the first failure propagates: the
+    // caller's staging scope must not release a relation that a
+    // sibling write is still reading
+    fs.map(f => scala.util.Try(scala.concurrent.Await.result(f,
+      scala.concurrent.duration.Duration.Inf))).foreach(_.get)
   }
 
   /** Bucket-column write: one shuffle keyed on the bucket column so
@@ -589,11 +591,19 @@ object IncrementalEr {
     * submitted them ([[Phases.phased]]): arrivals, buckets, edges,
     * contract, cc (over-cap graphs only), moved, commit. */
   def maintainBatch(dir: String)(batch: DataFrame, batchId: Long): Unit =
-    Phases.phased(batch.sparkSession, "IncrementalEr.maintainBatch")(
-      fold(dir, batch, batchId, _))
+    maintainUnder(dir, LocalGraph.MaxRows)(batch, batchId)
+
+  /** [[maintainBatch]] with the contracted-graph gate's driver-local
+    * cap (0 forces star contraction) — the seam
+    * [[Components.connectedComponents]] has. */
+  private[graft] def maintainUnder(dir: String, localMaxRows: Long)(
+      batch: DataFrame, batchId: Long): Unit =
+    Phases.phased(batch.sparkSession, "IncrementalEr.maintainBatch")(phase =>
+      TempDirs.staged(fold(dir, batch, batchId, localMaxRows, phase, _)))
 
   private def fold(dir: String, batch: DataFrame, batchId: Long,
-                   phase: String => Unit): Unit = {
+                   localMaxRows: Long, phase: String => Unit,
+                   s: TempDirs.Staged): Unit = {
     val spark = batch.sparkSession
     phase("arrivals")
     val last = lastCommitted(spark, dir)
@@ -604,10 +614,10 @@ object IncrementalEr {
     // pair costs ONE job instead of two. nObs == 0 also subsumes the
     // former batch.isEmpty pre-gate (an empty batch trivially yields
     // zero arrivals) — one more job gone from every fold.
-    val arrivals0 = batch.select(col("c_custkey").cast("long").as("k"),
+    val arrivals0 = s.checkpoint(batch.select(col("c_custkey").cast("long").as("k"),
       col("c_name").as("w"), col("c_nationkey").cast("long").as("blk"))
       .filter(col("w").isNotNull && col("blk").isNotNull)
-      .dropDuplicates("k").lazyCheckpoint()
+      .dropDuplicates("k"))
     val lay = ensureLayout(spark, dir, last.isDefined)
     // re-observation guard (kb-pruned, key-restricted label read):
     // genuinely-new arrivals only — a re-observed vertex must keep its
@@ -625,17 +635,14 @@ object IncrementalEr {
         val (mD, mS) = labelModsAt(spark, dir, up, lay)
         val (sets, n) =
           touchedSetsCount(arrivals0, xxhash64(col("k")), Seq(mD, mS))
-        val a = arrivals0.join(
+        val a = s.checkpoint(arrivals0.join(
           labelsLatestFor(spark, dir, up, arrivals0.select("k"),
             bcast = n <= MaxBroadcastArrivals,
             sets = Some((sets(mD), sets(mS))))
-            .select(col("v").as("k")), Seq("k"), "left_anti")
-          .lazyCheckpoint()
+            .select(col("v").as("k")), Seq("k"), "left_anti"))
         (n, a)
     }
     if (nObs == 0) {
-      TempDirs.dropCheckpoint(arrivals0)
-      if (arrivals ne arrivals0) TempDirs.dropCheckpoint(arrivals)
       commitNoOp(spark, dir, batchId, last.isDefined); return
     }
     // |arrivals| ≤ nObs: the guarded count job is gone (r17), so every
@@ -651,7 +658,7 @@ object IncrementalEr {
     // consumed by the probe-hash derivation, the index probe, and the
     // variant-index commit below (lazy: the probe-hash distinct+collect
     // — or, on the first batch, the edge count — materializes it)
-    val dA = dels(arrivals).lazyCheckpoint()
+    val dA = s.checkpoint(dels(arrivals))
     // probe hash families: the arrivals' variant hashes meet the
     // variant index (substitutions, arrival-shorter) and the base's
     // string hashes (arrival-longer); the arrivals' own string hashes
@@ -679,9 +686,9 @@ object IncrementalEr {
     // arrivals0's blocks: for a guarded fold the probe-hash collect
     // above materialized the guarded relation, so the pre-guard rows
     // can go now (batch 0 keeps them — arrivals IS arrivals0 there)
-    if (arrivals ne arrivals0) TempDirs.dropCheckpoint(arrivals0)
-    val newEdges = edgesIndexed(arrivals, standing.map(_._1),
-      standing.map(_._2), bcast, delsA = Some(dA)).lazyCheckpoint()
+    if (arrivals ne arrivals0) s.release(arrivals0)
+    val newEdges = s.checkpoint(edgesIndexed(arrivals, standing.map(_._1),
+      standing.map(_._2), bcast, delsA = Some(dA)))
     // ONE job (r17 — was an edge-count job plus the standing-label
     // read's own residue collect): materialize the edge checkpoint,
     // count the edges AND derive the endpoints' kb residue sets for
@@ -696,16 +703,18 @@ object IncrementalEr {
           xxhash64(col("v")), Seq(mD, mS))
         (twoN / 2, Some((m(mD), m(mS))))
     }
+    def noLabels = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      StructType(labelsSchema.fields.take(2)))
+    val selfLabels = arrivals.select(col("k").as("v"), col("k").as("component"))
     // contract new edges through the endpoint labels (arrivals label
     // themselves; standing endpoints from one pruned key-restricted
     // read), CC over the contracted label graph only, then the DELTA:
-    // arrivals plus touched-component members whose canonical moved
-    // checkpointed relations the LAZY delta still depends on — a
-    // localCheckpoint cannot recompute once its blocks are dropped, so
-    // these drop only AFTER the commit writes materialize the delta
-    var lateDrops = List.empty[DataFrame]
+    // arrivals plus touched-component members whose canonical moved.
+    // The lazy delta depends on checkpointed relations, so the scope
+    // releases them only when the fold exits, after the commit writes.
     val delta =
-      if (nNE == 0) arrivals.select(col("k").as("v"), col("k").as("component"))
+      if (nNE == 0) selfLabels
       else {
         phase("contract")
         val endpoints = newEdges.select(col("ea").as("v"))
@@ -713,132 +722,95 @@ object IncrementalEr {
         val standingEnd = last.map(up =>
           labelsLatestFor(spark, dir, up, endpoints,
             bcast = 2 * nNE <= MaxBroadcastArrivals, sets = epSets))
-          .getOrElse(spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            StructType(labelsSchema.fields.take(2))))
+          .getOrElse(noLabels)
         // BROADCAST the endpoint labels under the measured bound
         // (|endLabels| ≤ 2·nNE + nObs, r17): both contraction joins
         // then leave the edge checkpoint in place instead of shuffling
         // it twice, and the pruned label-read subtree builds on the
         // driver instead of riding two sort-merge sides
-        val endLabels0 = standingEnd
-          .unionByName(arrivals.select(col("k").as("v"), col("k").as("component")))
+        val endLabels0 = standingEnd.unionByName(selfLabels)
         val endLabels = if (2 * nNE + nObs <= MaxBroadcastArrivals)
           broadcast(endLabels0) else endLabels0
-        val contracted = newEdges
+        val contracted = s.checkpoint(newEdges
           .join(endLabels.select(col("v").as("ea"), col("component").as("la")), Seq("ea"))
           .join(endLabels.select(col("v").as("eb"), col("component").as("lb")), Seq("eb"))
           .filter(col("la") =!= col("lb"))
-          .select(col("la").as("a"), col("lb").as("b")).distinct()
-          .lazyCheckpoint()
+          .select(col("la").as("a"), col("lb").as("b")).distinct())
         // ONE bounded take decides the driver fast path AND fetches the
         // contracted edges (r17 — was: count job, CC's own vertex+edge
         // takes, the CC result spill, a merged-count job, and the
         // candidate read's residue collect). The contracted label graph
         // is bounded by touched components — at ANY corpus size it
-        // stays batch-shaped — but an over-cap graph falls back to the
-        // distributed CC below.
-        val localRows = LocalGraph.takeUnder(
-          contracted.select(col("a").cast("long"), col("b").cast("long")),
-          LocalGraph.MaxRows)
-        val localEs = localRows.map(_.map(r => (r.getLong(0), r.getLong(1))))
-        val localTouched = localEs.map(es =>
-          (es.map(_._1) ++ es.map(_._2)).distinct)
-        localEs match {
-          case Some(es) if es.isEmpty =>
-            TempDirs.dropCheckpoint(contracted)
-            arrivals.select(col("k").as("v"), col("k").as("component"))
-          case Some(es) if localTouched.exists(
-              _.length <= MaxBroadcastArrivals) =>
-            // DRIVER contraction fold: union-find over the collected
-            // label pairs; `merged` and `touched` become LocalRelations
-            // (broadcast builds with no job), and the candidate read's
-            // cb residue sets come from the driver rows ([[bucketOfLong]],
-            // parity-pinned) instead of a residue job
-            val touchedArr = localTouched.get
-            import spark.implicits._
-            val merged = Components.unionFindPairs(touchedArr, es).toSeq
-              .toDF("component", "g_new")
-            phase("moved")
-            val arrivalRows = arrivals.select(col("k").as("v"), col("k").as("component"))
-              .join(broadcast(merged), Seq("component"), "left")
-              .select(col("v"), coalesce(col("g_new"), col("component")).as("component"))
-            val movedStanding = last.map { up =>
-              val (cD, cS) = memberModsAt(spark, dir, up, lay)
-              val mSets = (touchedArr.map(bucketOfLong(_, cD)).distinct.toSeq,
-                touchedArr.map(bucketOfLong(_, cS)).distinct.toSeq)
-              val cand = memberRows(spark, dir, up, None, Some(mSets))
-                .join(broadcast(touchedArr.toSeq.toDF("component")),
-                  Seq("component"), "left_semi")
-                .select("v").distinct().lazyCheckpoint()
-              lateDrops ::= cand
-              // ONE job: candidate count (broadcast cap) + its kb
-              // residue sets for the standing-label read (r17)
-              val (lD, lS) = labelModsAt(spark, dir, up, lay)
-              val (cm, nCand) =
-                touchedSetsCount(cand, xxhash64(col("v")), Seq(lD, lS))
-              labelsLatestFor(spark, dir, up, cand,
-                  bcast = nCand <= MaxBroadcastArrivals,
-                  sets = Some((cm(lD), cm(lS))))
-                .join(broadcast(merged), Seq("component"))
-                .filter(col("g_new") =!= col("component"))
-                .select(col("v"), col("g_new").as("component"))
-            }.getOrElse(spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              StructType(labelsSchema.fields.take(2))))
-            lateDrops ::= contracted
-            // LAZY: the two label-delta commit writes below materialize
-            // it — the dedicated read-back job is gone (r17)
-            arrivalRows.unionByName(movedStanding).lazyCheckpoint()
-          case _ =>
-            // over-cap touched set (the take fetched the edges: union-find
-            // them) or over-cap contracted graph (the take rejected it:
-            // star contraction, with no second take)
-            val touched = contracted.select(col("a").as("component"))
-              .unionAll(contracted.select(col("b").as("component"))).distinct()
-            val (nTouched, merged) = (localEs, localTouched) match {
-              case (Some(es), Some(touchedArr)) =>
-                import spark.implicits._
-                (touchedArr.length.toLong,
-                  Components.unionFindPairs(touchedArr, es).toSeq
-                    .toDF("component", "g_new"))
-              case _ =>
-                val nC = contracted.count()
-                phase("cc")
-                (2 * nC, Components.connectedComponents(contracted, touched,
-                    localMaxRows = 0L)
-                  .select(col("v").as("component"), col("component").as("g_new")))
+        // stays batch-shaped — but a graph the take rejects runs star
+        // contraction instead.
+        val localEs = LocalGraph.takeUnder(
+            contracted.select(col("a").cast("long"), col("b").cast("long")),
+            localMaxRows)
+          .map(_.map(r => (r.getLong(0), r.getLong(1))))
+        if (localEs.exists(_.isEmpty)) {
+          s.release(contracted)
+          selfLabels
+        } else {
+          import spark.implicits._
+          // touched components and their merged canonical ids: DRIVER
+          // union-find over the fetched label pairs (`merged`/`touched`
+          // become LocalRelations — broadcast builds with no job), star
+          // contraction only when the take rejected the graph
+          val touchedArr = localEs.map(es => (es.map(_._1) ++ es.map(_._2)).distinct)
+          val touched = touchedArr.map(_.toSeq.toDF("component")).getOrElse(
+            contracted.select(col("a").as("component"))
+              .unionAll(contracted.select(col("b").as("component"))).distinct())
+          val (nTouched, merged) = (localEs, touchedArr) match {
+            case (Some(es), Some(ts)) =>
+              (ts.length.toLong,
+                Components.unionFindPairs(ts, es).toSeq.toDF("component", "g_new"))
+            case _ =>
+              val nC = contracted.count()
+              phase("cc")
+              (2 * nC, Components.connectedComponents(contracted, touched,
+                  localMaxRows = 0L)
+                .select(col("v").as("component"), col("component").as("g_new")))
+          }
+          phase("moved")
+          // broadcast-gated on nTouched (≥ |merged| = |touched|): the
+          // dedicated merged-count job is gone (r17)
+          def hM(df: DataFrame) =
+            if (nTouched <= MaxBroadcastArrivals) broadcast(df) else df
+          val arrivalRows = selfLabels
+            .join(hM(merged), Seq("component"), "left")
+            .select(col("v"), coalesce(col("g_new"), col("component")).as("component"))
+          val movedStanding = last.map { up =>
+            // the candidate read prunes to the touched components' cb
+            // buckets — derived from the driver rows when the take
+            // fetched them ([[bucketOfLong]], parity-pinned), else by
+            // the read's own residue job
+            val members = touchedArr match {
+              case Some(ts) =>
+                val (cD, cS) = memberModsAt(spark, dir, up, lay)
+                memberRows(spark, dir, up, None, Some((
+                  ts.map(bucketOfLong(_, cD)).distinct.toSeq,
+                  ts.map(bucketOfLong(_, cS)).distinct.toSeq)))
+              case None => memberRows(spark, dir, up,
+                Some(touched.select(xxhash64(col("component")).as("h"))))
             }
-            phase("moved")
-            // broadcast-gated on nTouched (≥ |merged| = |touched|): the
-            // dedicated merged-count job is gone (r17)
-            def hM(df: DataFrame) =
-              if (nTouched <= MaxBroadcastArrivals) broadcast(df) else df
-            val arrivalRows = arrivals.select(col("k").as("v"), col("k").as("component"))
-              .join(hM(merged), Seq("component"), "left")
-              .select(col("v"), coalesce(col("g_new"), col("component")).as("component"))
-            val movedStanding = last.map { up =>
-              def hT(df: DataFrame) =
-                if (nTouched <= MaxBroadcastArrivals) broadcast(df) else df
-              val cand = memberRows(spark, dir, up,
-                  Some(touched.select(xxhash64(col("component")).as("h"))))
-                .join(hT(touched), Seq("component"), "left_semi")
-                .select("v").distinct().lazyCheckpoint()
-              lateDrops ::= cand
-              val (lD, lS) = labelModsAt(spark, dir, up, lay)
-              val (cm, nCand) =
-                touchedSetsCount(cand, xxhash64(col("v")), Seq(lD, lS))
-              labelsLatestFor(spark, dir, up, cand,
-                  bcast = nCand <= MaxBroadcastArrivals,
-                  sets = Some((cm(lD), cm(lS))))
-                .join(hM(merged), Seq("component"))
-                .filter(col("g_new") =!= col("component"))
-                .select(col("v"), col("g_new").as("component"))
-            }.getOrElse(spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              StructType(labelsSchema.fields.take(2))))
-            lateDrops ::= contracted
-            arrivalRows.unionByName(movedStanding).lazyCheckpoint()
+            val cand = s.checkpoint(members
+              .join(hM(touched), Seq("component"), "left_semi")
+              .select("v").distinct())
+            // ONE job: candidate count (broadcast cap) + its kb
+            // residue sets for the standing-label read (r17)
+            val (lD, lS) = labelModsAt(spark, dir, up, lay)
+            val (cm, nCand) =
+              touchedSetsCount(cand, xxhash64(col("v")), Seq(lD, lS))
+            labelsLatestFor(spark, dir, up, cand,
+                bcast = nCand <= MaxBroadcastArrivals,
+                sets = Some((cm(lD), cm(lS))))
+              .join(hM(merged), Seq("component"))
+              .filter(col("g_new") =!= col("component"))
+              .select(col("v"), col("g_new").as("component"))
+          }.getOrElse(noLabels)
+          // LAZY: the two label-delta commit writes below materialize
+          // it — the dedicated read-back job is gone (r17)
+          s.checkpoint(arrivalRows.unionByName(movedStanding))
         }
       }
     // the lazy delta materializes inside these writes
@@ -857,11 +829,6 @@ object IncrementalEr {
         variantsDir(dir), batchId, "vb")) ++
       labelDeltaWrites(delta, dir, batchId, lay.labels, lay.members))
     touchMarker(spark, dir, s"$MarkerPrefix$batchId")
-    TempDirs.dropCheckpoint(arrivals)
-    TempDirs.dropCheckpoint(dA)
-    TempDirs.dropCheckpoint(newEdges)
-    TempDirs.dropCheckpoint(delta)
-    lateDrops.foreach(TempDirs.dropCheckpoint)
   }
 
   /** Right-to-be-forgotten on the ER artifact (the [[graft.functions
@@ -907,10 +874,12 @@ object IncrementalEr {
     * rematch, cc, leafsets, rewrites, labels. */
   def forget(spark: SparkSession, dir: String, ids: DataFrame,
              batchId: Long): Unit =
-    Phases.phased(spark, "IncrementalEr.forget")(forgetIds(spark, dir, ids, batchId, _))
+    Phases.phased(spark, "IncrementalEr.forget")(phase =>
+      TempDirs.staged(forgetIds(spark, dir, ids, batchId, phase, _)))
 
   private def forgetIds(spark: SparkSession, dir: String, ids: DataFrame,
-                        batchId: Long, phase: String => Unit): Unit = {
+                        batchId: Long, phase: String => Unit,
+                        s: TempDirs.Staged): Unit = {
     phase("locate")
     val last = lastCommitted(spark, dir).getOrElse {
       commitNoOp(spark, dir, batchId, hasCommits = false); return
@@ -923,30 +892,24 @@ object IncrementalEr {
     // a count plus the locate read's residue collect): the groupBy
     // yields the forget-set count (emptiness gate + broadcast caps)
     // AND its kb residue sets for the standing-label locate read.
-    val del = ids.select(col(ids.columns.head).cast("long").as("k")).distinct()
-      .lazyCheckpoint()
+    val del = s.checkpoint(
+      ids.select(col(ids.columns.head).cast("long").as("k")).distinct())
     val (lD, lS) = labelModsAt(spark, dir, last, lay)
     val (delM, nDel) = touchedSetsCount(del, xxhash64(col("k")), Seq(lD, lS))
     if (nDel == 0) {
-      TempDirs.dropCheckpoint(del)
       commitNoOp(spark, dir, batchId, hasCommits = true); return
     }
-    val affectedIds = labelsLatestFor(spark, dir, last,
+    val affectedIds = s.cache(labelsLatestFor(spark, dir, last,
         del.select(col("k").as("v")), bcast = nDel <= MaxBroadcastArrivals,
-        sets = Some((delM(lD), delM(lS))))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        sets = Some((delM(lD), delM(lS)))))
     // ONE job again (r17 — was the touched count plus the member
     // read's residue collect): touched-component count (emptiness gate
     // + broadcast caps) AND the cb residue sets for the member read
-    val affected = affectedIds.select(col("component")).distinct()
-      .lazyCheckpoint()
+    val affected = s.checkpoint(affectedIds.select(col("component")).distinct())
     val (cD, cS) = memberModsAt(spark, dir, last, lay)
     val (affM, nAffected) =
       touchedSetsCount(affected, xxhash64(col("component")), Seq(cD, cS))
     if (nAffected == 0) {
-      TempDirs.dropCheckpoint(affected)
-      affectedIds.unpersist()
-      TempDirs.dropCheckpoint(del)
       commitNoOp(spark, dir, batchId, hasCommits = true); return
     }
     phase("survivors")
@@ -959,8 +922,8 @@ object IncrementalEr {
     // forgotten rows' name buckets, so the batch is the consistent
     // rewrite unit for the index)
     // lazy: the touched-leaf collect right below materializes it
-    val touchedLeafs = base0.join(hDel(del), Seq("k"), "left_semi")
-      .select(col(BatchCol), col("wb")).distinct().lazyCheckpoint()
+    val touchedLeafs = s.checkpoint(base0.join(hDel(del), Seq("k"), "left_semi")
+      .select(col(BatchCol), col("wb")).distinct())
     // ONE collect serves the touched-leaf set (emptied-leaf math below)
     // AND the touched BATCH ids, which are bounded by the commit count
     // and pushed as an `isin` on the PARTITION column, so the survivor
@@ -974,12 +937,10 @@ object IncrementalEr {
     // collects below — which run BEFORE any file mutation, so by write
     // time they read their own blocks, not the directories they
     // replace (the self-overwrite contract, unchanged)
-    val survivors = base0.filter(col(BatchCol).isin(touchedBatchIds: _*))
-      .join(hDel(del), Seq("k"), "left_anti")
-      .lazyCheckpoint()
-    val rewritten = survivors
-      .join(broadcast(touchedLeafs), Seq(BatchCol, "wb"), "left_semi")
-      .lazyCheckpoint()
+    val survivors = s.checkpoint(base0.filter(col(BatchCol).isin(touchedBatchIds: _*))
+      .join(hDel(del), Seq("k"), "left_anti"))
+    val rewritten = s.checkpoint(survivors
+      .join(broadcast(touchedLeafs), Seq(BatchCol, "wb"), "left_semi"))
     phase("members")
     // clusters touching a forgotten id (`affected`, computed with the
     // gate above): relabel their REMAINING members from scratch —
@@ -994,37 +955,35 @@ object IncrementalEr {
     // twice per forget (r16, same fix as the maintain fold).
     def hAff(df: DataFrame) =
       if (nAffected <= MaxBroadcastArrivals) broadcast(df) else df
-    val cand = memberRows(spark, dir, last, None,
+    val cand = s.checkpoint(memberRows(spark, dir, last, None,
         Some((affM(cD), affM(cS))))
       .join(hAff(affected), Seq("component"), "left_semi")
-      .select("v").distinct().lazyCheckpoint()
+      .select("v").distinct())
     // ONE job: candidate count + kb residue sets for the label read
     val (candM, nCand) = touchedSetsCount(cand, xxhash64(col("v")), Seq(lD, lS))
-    val remaining = labelsLatestFor(spark, dir, last, cand,
+    val remaining = s.checkpoint(labelsLatestFor(spark, dir, last, cand,
         bcast = nCand <= MaxBroadcastArrivals,
         sets = Some((candM(lD), candM(lS))))
       .join(hAff(affected), Seq("component"), "left_semi")
       .join(hDel(del.select(col("k").as("v"))), Seq("v"), "left_anti")
-      .select(col("v"))
-      .lazyCheckpoint()
+      .select(col("v")))
     val nRemaining = remaining.count()
-    TempDirs.dropCheckpoint(cand)
+    s.release(cand)
     phase("rematch")
     // the member relation feeds edgesTouching through FIVE plan
     // references (both sides of three joins) — checkpoint it so the
     // base scan + semi-joins run once, not per reference (r16)
-    val memRel = base0.select(col("blk"), col("k"), col("w"))
+    val memRel = s.checkpoint(base0.select(col("blk"), col("k"), col("w"))
       .join(if (nRemaining <= MaxBroadcastArrivals)
           broadcast(remaining.select(col("v").as("k")))
         else remaining.select(col("v").as("k")), Seq("k"), "left_semi")
-      .join(hDel(del), Seq("k"), "left_anti")
-      .lazyCheckpoint()
-    val edges = edgesTouching(memRel, memRel,
-      bcast = nRemaining <= MaxBroadcastArrivals).lazyCheckpoint()
+      .join(hDel(del), Seq("k"), "left_anti"))
+    val edges = s.checkpoint(edgesTouching(memRel, memRel,
+      bcast = nRemaining <= MaxBroadcastArrivals))
     // ONE count materializes the edge checkpoint (memRel's blocks land
     // inside the same job) and doubles as the former isEmpty probe
     val nEdges = edges.count()
-    TempDirs.dropCheckpoint(memRel)
+    s.release(memRel)
     phase("cc")
     val newLabels =
       if (nRemaining == 0 || nEdges == 0)
@@ -1032,9 +991,8 @@ object IncrementalEr {
       else Components.connectedComponents(edges, remaining)
     val tombstones = affectedIds.select(col("v"),
       lit(null).cast("long").as("component"))
-    val delta = newLabels.select(col("v"), col("component").cast("long"))
-      .unionByName(tombstones)
-      .localCheckpoint()
+    val delta = s.checkpoint(newLabels.select(col("v"), col("component").cast("long"))
+      .unionByName(tombstones), eager = true)
     phase("leafsets")
     // leafs whose every row was forgotten are absent from the rewrite
     // (dynamic overwrite can't emit an empty partition) and must be
@@ -1051,13 +1009,13 @@ object IncrementalEr {
     // own variant modulus; every delta batch re-buckets under the
     // layout's
     val snapV = snapInfo(spark, dir, BaseSnapPrefix, last)
-    val varRewrite = dels(survivors.select("blk", "k", "w", BatchCol),
+    // lazy: materialized by its leafSet collect below
+    val varRewrite = s.checkpoint(dels(survivors.select("blk", "k", "w", BatchCol),
         Seq(BatchCol))
       .withColumn("vb", pmod(col("g_vh"),
         when(col(BatchCol) === lit(snapV.map(_._1).getOrElse(Long.MinValue)),
           lit(snapV.map(_._3).getOrElse(lay.variants)))
-          .otherwise(lit(lay.variants))).cast("int"))
-      .lazyCheckpoint() // materialized by its leafSet collect below
+          .otherwise(lit(lay.variants))).cast("int")))
     // existing variant leafs of the touched batches come from a DRIVER
     // directory listing, not a parquet scan: a leaf IS a partition
     // directory (`_er_batch=<b>/vb=<v>`), writers only materialize
@@ -1123,16 +1081,6 @@ object IncrementalEr {
     phase("labels")
     writeLabelDelta(delta, dir, batchId, lay.labels, lay.members)
     touchMarker(spark, dir, s"$MarkerPrefix$batchId")
-    TempDirs.dropCheckpoint(del)
-    TempDirs.dropCheckpoint(touchedLeafs)
-    TempDirs.dropCheckpoint(survivors)
-    TempDirs.dropCheckpoint(rewritten)
-    TempDirs.dropCheckpoint(varRewrite)
-    TempDirs.dropCheckpoint(delta)
-    TempDirs.dropCheckpoint(affected)
-    TempDirs.dropCheckpoint(remaining)
-    TempDirs.dropCheckpoint(edges)
-    affectedIds.unpersist()
   }
 
   /** Fold the committed label deltas into ONE snapshot generation (the
@@ -1166,11 +1114,12 @@ object IncrementalEr {
     val lay = layoutOf(spark, dir)
     val (bL, bM) = newLabelBuckets.map(b => (b, b))
       .getOrElse((lay.labels, lay.members))
-    val snapshot = currentLabels(spark, dir, last).localCheckpoint()
-    writeLabelDelta(snapshot, dir, batchId, bL, bM)
+    TempDirs.staged { s =>
+      writeLabelDelta(s.checkpoint(currentLabels(spark, dir, last), eager = true),
+        dir, batchId, bL, bM)
+    }
     touchMarker(spark, dir, s"$SnapshotPrefix${batchId}_${bL}_$bM")
     touchMarker(spark, dir, s"$MarkerPrefix$batchId")
-    TempDirs.dropCheckpoint(snapshot)
   }
 
   /** Fold the accumulated base + variant delta partitions into ONE
@@ -1196,25 +1145,27 @@ object IncrementalEr {
     val last = lastCommitted(spark, dir).getOrElse(return)
     if (last >= batchId) return
     val lay = layoutOf(spark, dir)
-    val live = baseRows(spark, dir, last, None)
-      .select(col("k"), col("w"), col("blk")).localCheckpoint()
-    val (bB, bV) = newBuckets.orElse(targetRowsPerBucket.map { t =>
-      val nBase = live.count()
-      val nVar = variantRows(spark, dir, last, None).count()
-      def size(n: Long) =
-        math.min(65536L, math.max(16L, (n + t - 1) / t)).toInt
-      (size(nBase), size(nVar))
-    }).getOrElse((lay.base, lay.variants))
-    inParallel(spark, Seq(
-      () => writeBucketed(live.withColumn("wb",
-          pmod(xxhash64(col("w")), lit(bB)).cast("int")),
-        baseDir(dir), batchId, "wb"),
-      () => writeBucketed(dels(live).withColumn("vb",
-          pmod(col("g_vh"), lit(bV)).cast("int")),
-        variantsDir(dir), batchId, "vb")))
+    val (bB, bV) = TempDirs.staged { s =>
+      val live = s.checkpoint(baseRows(spark, dir, last, None)
+        .select(col("k"), col("w"), col("blk")), eager = true)
+      val (bB, bV) = newBuckets.orElse(targetRowsPerBucket.map { t =>
+        val nBase = live.count()
+        val nVar = variantRows(spark, dir, last, None).count()
+        def size(n: Long) =
+          math.min(65536L, math.max(16L, (n + t - 1) / t)).toInt
+        (size(nBase), size(nVar))
+      }).getOrElse((lay.base, lay.variants))
+      inParallel(spark, Seq(
+        () => writeBucketed(live.withColumn("wb",
+            pmod(xxhash64(col("w")), lit(bB)).cast("int")),
+          baseDir(dir), batchId, "wb"),
+        () => writeBucketed(dels(live).withColumn("vb",
+            pmod(col("g_vh"), lit(bV)).cast("int")),
+          variantsDir(dir), batchId, "vb")))
+      (bB, bV)
+    }
     touchMarker(spark, dir, s"$BaseSnapPrefix${batchId}_${bB}_$bV")
     touchMarker(spark, dir, s"$MarkerPrefix$batchId")
-    TempDirs.dropCheckpoint(live)
   }
 
   /** Drop label/member partitions BELOW the current label snapshot

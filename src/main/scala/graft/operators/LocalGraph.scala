@@ -81,9 +81,26 @@ private[graft] object LocalGraph {
     * shape funnels up to cap rows through one partition), and only an
     * under-cap relation is collected. */
   def collectUnder(df: DataFrame, cap0: Long): Option[Array[Row]] =
-    if (cap0 <= 0) None
-    else {
-      val cap = math.min(cap0, Int.MaxValue - 1L)
-      if (df.count() > cap) None else Some(df.collect())
-    }
+    if (cap0 <= 0) None else collectAtMost(df, cap0)
+
+  /** The edge step of a graph gate: Some(all rows) iff `df` has at most
+    * `cap` ≥ 0 rows, by count then collect. Given the cap left after
+    * the vertex step, the gate is [[takeGraphUnder]]'s rule (local iff
+    * cap > 0 and |V| + |E| ≤ cap), so a graph whose vertices fill the
+    * cap is still local when it has no edges. */
+  def collectAtMost(df: DataFrame, cap0: Long): Option[Array[Row]] = {
+    val cap = math.min(cap0, Int.MaxValue - 1L)
+    if (df.count() > cap) None else Some(df.collect())
+  }
+
+  /** Whether a driver-local side may key its maps on boxed ids: the
+    * vertex column and both edge endpoint columns share one type. The
+    * distributed joins coerce numerics and a boxed map does not, so a
+    * type mismatch must take the distributed side, not silently
+    * diverge from it. */
+  def sameIdType(vertices: DataFrame, edges: DataFrame): Boolean = {
+    val t = vertices.schema.head.dataType
+    val es = edges.schema
+    t == es(0).dataType && t == es(1).dataType
+  }
 }

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.pipeline.TempDirs
+
 /** Fixed-point integer PageRank over an undirected pair list — the
   * graph-centrality quality signal web-corpus curation runs (CCNet /
   * RefinedWeb-style pipelines weight pages by link authority; here the
@@ -46,7 +48,8 @@ object PageRank {
                       iterations: Int,
                       scale: Long = 1000000000000L,
                       dampNum: Long = 85L, dampDen: Long = 100L,
-                      localMaxRows: Long = LocalGraph.MaxRows): DataFrame = {
+                      localMaxRows: Long = LocalGraph.MaxRows): DataFrame =
+      TempDirs.staged { s =>
     require(iterations >= 1, "need at least one iteration")
     require(dampNum > 0 && dampNum < dampDen, "damping must be in (0,1)")
     // STAGE the edge relation once (r17, verdict item 5): the caller's
@@ -59,7 +62,7 @@ object PageRank {
     // discarding them — the permanent gate tax at 100 TB scale), and
     // the distributed loop's sym union reads a file twice instead of
     // running the self-join twice.
-    val eStaged = graft.pipeline.TempDirs.spillParquet(
+    val eStaged = TempDirs.spillParquet(
       edges.select(col("a"), col("b")), "graft_pagerank_e_")
     // SMALL-GRAPH FAST PATH (measured, capped — see [[LocalGraph]]):
     // the identical integer fixed point over collected rows. Per
@@ -71,19 +74,10 @@ object PageRank {
     // (pinned by LocalGraphSpec against the cap-0 distributed loop).
     locally {
       val nodeRel = nodes.select(col(idCol))
-      // type-mismatch guard (r16 advice): the local maps key on boxed
-      // values, while the distributed joins coerce numerics — a
-      // node/edge endpoint type mismatch must fall through, not
-      // silently collapse every rank to pure teleport
-      val es = eStaged.schema
-      val localOk = {
-        val nt = nodeRel.schema.head.dataType
-        nt == es(0).dataType && nt == es(1).dataType
-      }
-      if (localOk)
+      if (LocalGraph.sameIdType(nodeRel, eStaged))
       for (nRows <- LocalGraph.takeUnder(nodeRel, localMaxRows)
              if nRows.nonEmpty; // n = 0 keeps the distributed shape (empty out)
-           eRows <- LocalGraph.collectUnder(
+           eRows <- LocalGraph.collectAtMost(
              eStaged, localMaxRows - nRows.length)) {
         val n = nRows.length.toLong
         val adj = new scala.collection.mutable.HashMap[Any,
@@ -117,7 +111,7 @@ object PageRank {
         }
         val spark = edges.sparkSession
         val schema = nodeRel.withColumn("rank", lit(0L)).schema
-        return graft.pipeline.TempDirs.spillParquet(spark.createDataFrame(
+        return TempDirs.spillParquet(spark.createDataFrame(
           spark.sparkContext.parallelize(
             ranks.toSeq.map { case (v, rk) =>
               org.apache.spark.sql.Row(v, rk) }, 1),
@@ -128,36 +122,32 @@ object PageRank {
     // caching: every round joins ranks on v, and a cache that already
     // carries HashPartitioning(v) feeds k sort-merge joins without k
     // re-shuffles of the (large) edge side
-    val sym = eStaged.select(col("a").as("v"), col("b").as("dst"))
+    val sym = s.cache(eStaged.select(col("a").as("v"), col("b").as("dst"))
       .union(eStaged.select(col("b").as("v"), col("a").as("dst")))
-      .repartition(col("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .repartition(col("v")))
     val deg = sym.groupBy("v").agg(count(lit(1)).as("deg"))
     val stats = nodes.agg(count(lit(1)).as("n"))
     val base = nodes.select(col(idCol).as("v")).crossJoin(broadcast(stats))
     val teleport = expr(s"($scale * ${dampDen - dampNum}) div ($dampDen * n)")
-    var ranks = base.select(col("v"), expr(s"$scale div n").as("rank"))
-      .localCheckpoint()
+    var ranks = s.checkpoint(
+      base.select(col("v"), expr(s"$scale div n").as("rank")), eager = true)
     for (_ <- 1 to iterations) {
       val contribs = ranks.join(deg, Seq("v"))
         .select(col("v"), expr("rank div deg").as("contrib"))
       val in = contribs.join(sym, Seq("v"))
         .groupBy("dst").agg(sum("contrib").as("sum_in"))
-      val next = base
+      val next = s.checkpoint(base
         .join(in, base("v") === in("dst"), "left")
         .select(col("v"),
           (teleport +
-            expr(s"($dampNum * coalesce(sum_in, 0L)) div $dampDen")).as("rank"))
-        .localCheckpoint()
-      graft.pipeline.TempDirs.dropCheckpoint(ranks)
+            expr(s"($dampNum * coalesce(sum_in, 0L)) div $dampDen")).as("rank")),
+        eager = true)
+      s.release(ranks)
       ranks = next
     }
     // spill-and-release (TempDirs.spillParquet contract): the converged
     // ranks must not reach a registered query as a live checkpoint block
-    val out = graft.pipeline.TempDirs.spillParquet(
+    TempDirs.spillParquet(
       ranks.select(col("v").as(idCol), col("rank")), "graft_pagerank_")
-    graft.pipeline.TempDirs.dropCheckpoint(ranks)
-    sym.unpersist()
-    out
   }
 }

@@ -52,17 +52,9 @@ object Sssp {
     // exact long arithmetic either way. The negative-weight contract
     // is enforced on the collected rows (same loud failure, one fewer
     // job than the distributed pre-scan).
-    // type-mismatch guard (r16 advice): the local maps key on boxed
-    // values, while the distributed joins coerce numerics — a seed/edge
-    // endpoint type mismatch must fall through, not silently diverge
-    val localOk = {
-      val st = seed0.schema.head.dataType
-      val es = e.schema
-      st == es(0).dataType && st == es(1).dataType
-    }
-    if (localOk)
+    if (LocalGraph.sameIdType(seed0, e))
     for (sRows <- LocalGraph.collectUnder(seed0, localMaxRows);
-         eRows <- LocalGraph.collectUnder(e, localMaxRows - sRows.length)
+         eRows <- LocalGraph.collectAtMost(e, localMaxRows - sRows.length)
          // a NULL weight would NPE here where the distributed path
          // propagates null arithmetic (r16 advice) — same dirty input
          // must take the same path, so fall through instead

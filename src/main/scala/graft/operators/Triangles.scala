@@ -2,7 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.pipeline.TempDirs
 
 /** Distributed triangle counting by degree-ordered node-iterator
   * (Suri & Vassilvitskii, WWW'11 — the MapReduce-era standard that
@@ -46,12 +47,12 @@ import org.apache.spark.storage.StorageLevel
   * does not common-subexpression DataFrames, so unstaged this
   * re-derived the edge build ~15× (measured: the first cut of q177
   * spent 12 s at sf0.1, dominated by repeated lineitem self-joins).
-  * The input is persisted for the passes that build degrees and
+  * The input is cached for the passes that build degrees and
   * orientation, the oriented edge list is spilled to a JVM-scoped
   * parquet (the natural stage boundary — at 100 TB the oriented
   * adjacency IS the artifact you'd land between build and enumerate),
-  * and the cache is RELEASED before return, so registered queries
-  * inherit no live blocks.
+  * and the cache is released when the call exits, so registered
+  * queries inherit no live blocks.
   */
 object Triangles {
 
@@ -64,9 +65,10 @@ object Triangles {
 
   /** [[perNode]]'s body; its staging jobs carry their phase: degree,
     * orient, adjacency, intersect. */
-  private def enumerate(edges: DataFrame, phase: String => Unit): DataFrame = {
+  private def enumerate(edges: DataFrame, phase: String => Unit): DataFrame =
+      TempDirs.staged { s =>
     phase("degree")
-    val e = edges.persist(StorageLevel.MEMORY_AND_DISK)
+    val e = s.cache(edges)
     // STAGE the degree relation (r17): referenced by both orientation
     // joins and the final output join, an unstaged deg re-aggregated
     // the m-row union per reference (two extra m-row shuffles), and its
@@ -77,7 +79,7 @@ object Triangles {
     // autoBroadcastJoinThreshold (the scale-safe gate: a billion-node
     // graph's deg file exceeds the threshold and keeps sort-merge) and
     // the edge side stays in place, map-only.
-    val deg = graft.pipeline.TempDirs.spillParquet(
+    val deg = TempDirs.spillParquet(
       e.select(col("a").as("n"))
         .unionAll(e.select(col("b").as("n")))
         .groupBy("n").agg(count(lit(1)).as("degree")),
@@ -94,14 +96,14 @@ object Triangles {
           (col("da") === col("db") && col("a") < col("b")), col("b"))
           .otherwise(col("a")).as("v"))
     phase("orient")
-    val ori = graft.pipeline.TempDirs.spillParquet(ori0, "graft_tri_ori_")
+    val ori = TempDirs.spillParquet(ori0, "graft_tri_ori_")
     // sorted out-adjacency, STAGED once (r17): both attach joins below
     // reference it — unstaged, each built its own ObjectHashAggregate
     // over a separate m-row shuffle; file-backed it aggregates once and
     // broadcasts statically under the threshold (same scale gate as deg
     // — arrays are O(√m) by the orientation cap, so total bytes ≈ m)
     phase("adjacency")
-    val adj = graft.pipeline.TempDirs.spillParquet(
+    val adj = TempDirs.spillParquet(
       ori.groupBy(col("u").as("n"))
         .agg(sort_array(collect_list(col("v"))).as("nbrs")),
       "graft_tri_adj_")
@@ -116,12 +118,10 @@ object Triangles {
     val perNode = tri
       .select(explode(array(col("u"), col("v"), col("w"))).as("n"))
       .groupBy("n").agg(count(lit(1)).as("triangles"))
-    val out = graft.pipeline.TempDirs.spillParquet(
+    TempDirs.spillParquet(
       deg.join(perNode, Seq("n"), "left")
         .select(col("n"), col("degree"),
           coalesce(col("triangles"), lit(0L)).as("triangles")),
       "graft_tri_out_")
-    e.unpersist()
-    out
   }
 }

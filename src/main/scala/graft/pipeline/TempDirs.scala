@@ -1,16 +1,27 @@
 package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.storage.StorageLevel
 
-/** Staging for operator-internal relations: JVM-scoped temp directories
-  * for spilled label tables and per-(JVM, fixture) index builds, the
-  * materialize-and-release spill, and lazy local checkpoints with their
-  * release. `Files.createTempDirectory` alone leaks the dir forever —
-  * a Verify+bench session that builds indexes per invocation accumulated never-deleted
-  * /tmp trees (the round-11 q136 finding). Everything allocated here is
-  * registered with ONE shutdown hook and deleted recursively at JVM
-  * exit, so within-session reuse stays cheap and nothing outlives the
-  * session.
+/** Staging for operator-internal relations. Two modes:
+  *
+  *  - [[staged]]: a scope for the relations one call reads more than
+  *    once. `cache` (MEMORY_AND_DISK) and `checkpoint` (a local
+  *    checkpoint, lazy or eager) stage a relation; `release` frees it
+  *    early; whatever the scope still holds is freed, non-blocking,
+  *    when the call exits, by return or by exception. No staged block
+  *    outlives the call, so a frame the call returns must not depend on
+  *    a staged relation.
+  *  - [[spillParquet]]: a frame that outlives the call — the converged
+  *    output of an iterative operator, a per-round frontier — lands in
+  *    a scratch parquet and is read back from the files.
+  *
+  * Scratch directories ([[scoped]]) are deleted recursively by ONE
+  * shutdown hook at JVM exit: `Files.createTempDirectory` alone leaks
+  * the dir forever, and a Verify+bench session that builds indexes per
+  * invocation accumulated never-deleted /tmp trees (the round-11 q136
+  * finding). RegistrySpec tripwires the contract: no persisted RDD
+  * survives any registered query's construction.
   */
 object TempDirs {
   private val dirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
@@ -31,20 +42,17 @@ object TempDirs {
     dir.toString
   }
 
-  /** Materialize-and-release: write `df` to a scoped temp parquet and
-    * return the file-backed frame. The house discipline for ITERATIVE
-    * operators (components, pagerank, prefix doubling, IVF-PQ) whose
-    * loop persists rounds internally: the FINAL frame must not be
-    * returned persisted/checkpointed, because the consumers are
-    * registered queries with no unpersist hook — a leaked block squats
-    * executor memory for the rest of a 160-query Verify session (the
-    * round-10 accreted-state class, 1.7× bench inflation measured).
-    * Truncating lineage through STORAGE instead of cache is also the
-    * 100 TB shape: land the converged table once, derive every
-    * consumer from the files. RegistrySpec tripwires the invariant
-    * (`getPersistentRDDs` empty after each registered query's
-    * construction). The caller unpersists its own inputs AFTER this
-    * returns (the write is the materializing action). */
+  /** Write `df` to a scoped temp parquet and return the file-backed
+    * frame: the staging mode for a frame that outlives the call. The
+    * consumers of an operator's result are registered queries with no
+    * release hook, so a returned cached or checkpointed frame would
+    * squat executor memory for the rest of a 160-query Verify session
+    * (the round-10 accreted-state class, 1.7× bench inflation
+    * measured). Truncating lineage through STORAGE instead of cache is
+    * also the 100 TB shape: land the converged table once, derive every
+    * consumer from the files. The write is the materializing action,
+    * so a [[staged]] scope may release the relations it read once this
+    * returns. */
   def spillParquet(df: DataFrame, prefix: String): DataFrame = {
     val path = s"${scoped(prefix)}/data"
     df.write.parquet(path)
@@ -53,14 +61,60 @@ object TempDirs {
     df.sparkSession.read.schema(df.schema).parquet(path)
   }
 
-  /** Free the storage blocks of a `localCheckpoint`'ed DataFrame.
-    * `Dataset.unpersist` only drops CacheManager entries; localCheckpoint
-    * persists the underlying RDD directly, so without this each
-    * iteration's MEMORY_AND_DISK blocks would accumulate until the
-    * ContextCleaner got around to them — a leak proportional to
-    * iteration count on large graphs. The checkpointed plan is a single
-    * `LogicalRDD` holding exactly that RDD. */
-  private[graft] def dropCheckpoint(df: DataFrame): Unit =
+  /** Runs `body` with a [[Staged]] scope and releases, non-blocking,
+    * every relation the scope still holds when `body` exits: a normal
+    * return, an early `return` or an exception alike. */
+  def staged[T](body: Staged => T): T = {
+    val s = new Staged
+    try body(s) finally s.releaseAll()
+  }
+
+  /** The staging scope of one operator call. A relation staged here is
+    * released when the scope exits, or earlier by [[release]]; its
+    * blocks never outlive the call. A frame the call returns must not
+    * depend on a staged relation: spill it first ([[spillParquet]]). */
+  final class Staged private[TempDirs] () {
+    private var held = List.empty[(DataFrame, () => Unit)]
+
+    /** `df.localCheckpoint`: lazy by default, materialized by the first
+      * job that reads it, with the plan's SQL metrics kept reachable
+      * ([[lazyCheckpoint]]); `eager` materializes it here, one job. */
+    def checkpoint(df: DataFrame, eager: Boolean = false): DataFrame = {
+      val cp = if (eager) df.localCheckpoint() else lazyCheckpoint(df)
+      hold(cp, () => dropCheckpoint(cp))
+    }
+
+    /** `df` persisted at MEMORY_AND_DISK, `Dataset.cache`'s level. */
+    def cache(df: DataFrame): DataFrame =
+      hold(df.persist(StorageLevel.MEMORY_AND_DISK),
+        () => { df.unpersist(blocking = false); () })
+
+    /** Releases `df`, staged in this scope, before the scope exits. */
+    def release(df: DataFrame): Unit = {
+      val (mine, rest) = held.partition(_._1 eq df)
+      require(mine.nonEmpty, "release of a relation this scope does not hold")
+      held = rest
+      mine.foreach(_._2())
+    }
+
+    private def hold(df: DataFrame, free: () => Unit): DataFrame = {
+      held ::= ((df, free))
+      df
+    }
+
+    private[TempDirs] def releaseAll(): Unit = {
+      val all = held
+      held = Nil
+      all.foreach(_._2())
+    }
+  }
+
+  /** Free the storage blocks of a `localCheckpoint`'ed DataFrame:
+    * `Dataset.unpersist` only drops CacheManager entries, while
+    * localCheckpoint persists the underlying RDD directly. The
+    * checkpointed plan is a single `LogicalRDD` holding exactly that
+    * RDD. */
+  private def dropCheckpoint(df: DataFrame): Unit =
     checkpointRdd(df).foreach(_.unpersist(blocking = false))
 
   /** `df.localCheckpoint(false)` whose plan's SQL metrics stay
@@ -72,7 +126,7 @@ object TempDirs {
     * updates for them. Once a GC has collected them, the DAGScheduler
     * logs `attempted to access non-existent accumulator` with a stack
     * trace per task and metric, and drops those updates. */
-  private[graft] def lazyCheckpoint(df: DataFrame): DataFrame = {
+  private def lazyCheckpoint(df: DataFrame): DataFrame = {
     val cp = df.localCheckpoint(false)
     val metrics = planMetrics(df)
     checkpointRdd(cp).foreach(metricsOf.put(_, metrics))
@@ -84,10 +138,6 @@ object TempDirs {
     PlanWalk.collectWithSubqueries(df.queryExecution.executedPlan) {
       case p => p.metrics.values.toSeq
     }.flatten
-
-  implicit class LazyCheckpoint(private val df: DataFrame) extends AnyVal {
-    def lazyCheckpoint(): DataFrame = TempDirs.lazyCheckpoint(df)
-  }
 
   private object PlanWalk extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 

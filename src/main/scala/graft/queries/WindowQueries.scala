@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{Cols, Tables}
 import graft.operators.{Scd2, TopKByWeight}
+import graft.pipeline.TempDirs
 
 /** Window-function battery, pivot, percentiles and the typed top-k
   * aggregate — the analytic surface beyond the reference's own usage
@@ -696,20 +697,20 @@ object WindowQueries {
       |SELECT x AS part, y AS neighbor, cab AS co_count, cosine, rn AS rank
       |FROM r WHERE rn <= 5""".stripMargin) { (s, d) =>
     // spill-and-release: ic and pairs both re-reference the basket
-    // distinct (and pairs twice more through sym) — persist it for the
+    // distinct (and pairs twice more through sym) — cache it for the
     // two builds, land both derived tables, release the cache
-    val op = Tables.lineitem(s, d)
-      .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val ic = graft.pipeline.TempDirs.spillParquet(
-      op.groupBy("p").agg(count(lit(1)).as("c")), "graft_cf_ic_")
-    val pairs = graft.pipeline.TempDirs.spillParquet(
-      op.select(col("o"), col("p").as("pa"))
-        .join(op.select(col("o"), col("p").as("pb")), Seq("o"))
-        .filter(col("pa") < col("pb"))
-        .groupBy("pa", "pb").agg(count(lit(1)).as("cab"))
-        .filter(col("cab") >= 2), "graft_cf_pairs_")
-    op.unpersist()
+    val (ic, pairs) = TempDirs.staged { st =>
+      val op = st.cache(Tables.lineitem(s, d)
+        .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct())
+      (TempDirs.spillParquet(
+        op.groupBy("p").agg(count(lit(1)).as("c")), "graft_cf_ic_"),
+        TempDirs.spillParquet(
+          op.select(col("o"), col("p").as("pa"))
+            .join(op.select(col("o"), col("p").as("pb")), Seq("o"))
+            .filter(col("pa") < col("pb"))
+            .groupBy("pa", "pb").agg(count(lit(1)).as("cab"))
+            .filter(col("cab") >= 2), "graft_cf_pairs_"))
+    }
     val sym = pairs.select(col("pa").as("x"), col("pb").as("y"), col("cab"))
       .unionAll(pairs.select(col("pb").as("x"), col("pa").as("y"), col("cab")))
     val sc = sym
@@ -766,18 +767,18 @@ object WindowQueries {
       |        JOIN op c ON a.o = c.o AND b.p < c.p
       |        GROUP BY 1, 2, 3 HAVING COUNT(*) >= 2)
       |SELECT part_a, part_b, part_c, support FROM tri""".stripMargin) { (s, d) =>
-    val op0 = Tables.lineitem(s, d)
-      .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val op = graft.pipeline.TempDirs.spillParquet(op0, "graft_apriori_op_")
-    val l2 = graft.pipeline.TempDirs.spillParquet(
-      op.select(col("o"), col("p").as("a"))
-        .join(op.select(col("o"), col("p").as("b")), Seq("o"))
-        .filter(col("a") < col("b"))
-        .groupBy("a", "b").agg(count(lit(1)).as("sup"))
-        .filter(col("sup") >= 2)
-        .select("a", "b"), "graft_apriori_l2_")
-    op0.unpersist()
+    val (op, l2) = TempDirs.staged { st =>
+      val op = TempDirs.spillParquet(st.cache(Tables.lineitem(s, d)
+        .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()),
+        "graft_apriori_op_")
+      (op, TempDirs.spillParquet(
+        op.select(col("o"), col("p").as("a"))
+          .join(op.select(col("o"), col("p").as("b")), Seq("o"))
+          .filter(col("a") < col("b"))
+          .groupBy("a", "b").agg(count(lit(1)).as("sup"))
+          .filter(col("sup") >= 2)
+          .select("a", "b"), "graft_apriori_l2_"))
+    }
     val cand = l2.select(col("a"), col("b"))
       .join(l2.select(col("a"), col("b").as("c")), Seq("a"))
       .filter(col("b") < col("c"))

@@ -7,6 +7,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 import org.apache.spark.sql.types._
 
+import graft.pipeline.TempDirs
+
 /** Structured-Streaming pipeline re-expressing the reference's Kafka →
   * bronze / serving-state flow (/root/reference/scripts/spark_jobs/
   * streaming_flow.py).
@@ -468,13 +470,13 @@ object Events {
   def lshDedupGateBatch(indexDir: String, cleanDir: String, dupDir: String,
                         idCol: String = "doc_id", textCol: String = "text",
                         shingleN: Int = 3, k: Int = 16, bands: Int = 8,
-                        threshold: Double = 0.5)(batch: DataFrame, batchId: Long): Unit = {
+                        threshold: Double = 0.5)(batch: DataFrame, batchId: Long): Unit =
+      TempDirs.staged { s =>
     import graft.functions.Dedup
     if (batch.isEmpty) return
     val spark = batch.sparkSession
     val sigs = Dedup.minhashSignaturesAffine(batch, idCol, textCol, shingleN, k)
-    val banded = Dedup.bandedIndex(sigs, idCol, k, bands)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val banded = s.cache(Dedup.bandedIndex(sigs, idCol, k, bands))
     val hasIndex = {
       val p = new org.apache.hadoop.fs.Path(indexDir)
       val fc = org.apache.hadoop.fs.FileContext.getFileContext(
@@ -489,8 +491,7 @@ object Events {
       else banded.limit(0), idCol)
     // cross pairs carry the ARRIVING doc on `a` — always the victim;
     // within-batch pairs cluster transitively, keep each component's min
-    val withinPairs = est(within).select(col("a"), col("b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val withinPairs = s.cache(est(within).select(col("a"), col("b")))
     val withinDupIds =
       if (withinPairs.isEmpty) withinPairs.select(col("a").as(idCol)).limit(0)
       else graft.operators.Components
@@ -498,10 +499,9 @@ object Events {
           withinPairs.select(col("a")).union(withinPairs.select(col("b"))).distinct())
         .filter(col("v") =!= col("component"))
         .select(col("v").as(idCol))
-    val dupIds = est(cross).select(col("a").as(idCol))
+    val dupIds = s.cache(est(cross).select(col("a").as(idCol))
       .unionByName(withinDupIds)
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     val dups = batch.join(dupIds, Seq(idCol), "left_semi")
     val clean = batch.join(dupIds, Seq(idCol), "left_anti")
     dups.withColumn("_batch_id", lit(batchId)).write.mode("append").parquet(dupDir)
@@ -512,9 +512,6 @@ object Events {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("_gate_batch")
       .parquet(indexDir)
-    dupIds.unpersist()
-    withinPairs.unpersist()
-    banded.unpersist()
   }
 
   /** Streaming ENTITY-RESOLUTION ops gate — one foreachBatch sink for a
@@ -576,7 +573,7 @@ object Events {
   def vectorDedupGateBatch(indexRoot: String, streamIndexDir: String,
                            cleanDir: String, dupDir: String,
                            threshold: Double = 0.9)(
-                           batch: DataFrame, batchId: Long): Unit = {
+                           batch: DataFrame, batchId: Long): Unit = TempDirs.staged { s =>
     import graft.functions.{Similarity, VectorIndex}
     if (batch.isEmpty) return
     val spark = batch.sparkSession
@@ -587,8 +584,7 @@ object Events {
         p.toUri, spark.sparkContext.hadoopConfiguration)
       fc.util.exists(p)
     }
-    val assigned = Similarity.ivfAssign(batch, cents)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val assigned = s.cache(Similarity.ivfAssign(batch, cents))
     val index = VectorIndex.assigned(spark, indexRoot)
       .unionByName(
         if (hasStream) spark.read.parquet(streamIndexDir).drop("_gate_batch")
@@ -601,9 +597,8 @@ object Events {
       .filter(Similarity.dot(col("ea"), col("eb")) / (col("na") * col("nb"))
         >= threshold)
       .select(col("vec_id"))
-    val withinPairs = Similarity.cosineNearDupPairs(assigned, threshold)
-      .select(col("a"), col("b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val withinPairs = s.cache(Similarity.cosineNearDupPairs(assigned, threshold)
+      .select(col("a"), col("b")))
     val withinDupIds =
       if (withinPairs.isEmpty) withinPairs.select(col("a").as("vec_id")).limit(0)
       else graft.operators.Components
@@ -611,8 +606,7 @@ object Events {
           withinPairs.select(col("a")).union(withinPairs.select(col("b"))).distinct())
         .filter(col("v") =!= col("component"))
         .select(col("v").as("vec_id"))
-    val dupIds = cross.unionByName(withinDupIds).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val dupIds = s.cache(cross.unionByName(withinDupIds).distinct())
     val dups = batch.join(dupIds, Seq("vec_id"), "left_semi")
     val clean = batch.join(dupIds, Seq("vec_id"), "left_anti")
     dups.withColumn("_batch_id", lit(batchId)).write.mode("append").parquet(dupDir)
@@ -623,9 +617,6 @@ object Events {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("_gate_batch")
       .parquet(streamIndexDir)
-    dupIds.unpersist()
-    withinPairs.unpersist()
-    assigned.unpersist()
   }
 
   /** Streaming LEXICAL-INDEX maintenance — the arrival path for the
@@ -767,23 +758,20 @@ object Events {
     * caveat as [[constraintGateBatch]]. */
   def lmQualityGateBatch(modelDir: String, passDir: String, failDir: String,
                          maxBits: Double, oovBits: Double = 20.0)(
-      batch: DataFrame, id: Long): Unit = {
+      batch: DataFrame, id: Long): Unit = TempDirs.staged { s =>
     if (batch.isEmpty) return
     val model = batch.sparkSession.read.parquet(modelDir)
     val scored = graft.functions.LanguageModel
       .scoreAgainst(batch, "doc_id", "text", model, oovBits)
       .select(col("doc_id"), col("bits_per_char"))
-    val joined = batch.join(scored, Seq("doc_id"), "left")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      joined.filter(col("bits_per_char") <= maxBits)
-        .write.mode("append").parquet(passDir)
-      // null-safe complement: score null (no trigrams) also quarantines
-      joined.filter(!(col("bits_per_char") <= maxBits) ||
-          col("bits_per_char").isNull)
-        .withColumn("_batch_id", lit(id))
-        .write.mode("append").parquet(failDir)
-    } finally joined.unpersist()
+    val joined = s.cache(batch.join(scored, Seq("doc_id"), "left"))
+    joined.filter(col("bits_per_char") <= maxBits)
+      .write.mode("append").parquet(passDir)
+    // null-safe complement: score null (no trigrams) also quarantines
+    joined.filter(!(col("bits_per_char") <= maxBits) ||
+        col("bits_per_char").isNull)
+      .withColumn("_batch_id", lit(id))
+      .write.mode("append").parquet(failDir)
   }
 
   /** Gold → serving-DB export per micro-batch: the dashboard tier the

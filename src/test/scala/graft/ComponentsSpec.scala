@@ -94,11 +94,16 @@ class ComponentsSpec extends SparkSpec {
     // off a non-fixpoint edge set would be silently wrong, so the
     // distributed side (cap 0) must throw rather than return them
     val chain = (1L until 200L).map(i => (i, i + 1L))
+    val sc = spark.sparkContext
+    sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    val before = sc.getPersistentRDDs.keySet.toSet
     val ex = intercept[IllegalStateException] {
       Components.connectedComponents(chain.toDF("a", "b"), (1L to 200L).toDF("v"),
         maxIters = 1, localMaxRows = 0L)
     }
     assert(ex.getMessage.contains("did not converge"))
+    // the failure releases the rounds' checkpointed edge sets
+    assert(sc.getPersistentRDDs.keySet.toSet === before)
     // the same graph converges fine under the default bound
     assert(comps(chain, 1L to 200L) === (1L to 200L).map(_ -> 1L).toMap)
   }

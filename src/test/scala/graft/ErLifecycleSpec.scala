@@ -147,6 +147,49 @@ class ErLifecycleSpec extends SparkSpec {
     assert(IncrementalEr.lastCommitted(spark, dir) === Some(3L))
   }
 
+  test("contracted-graph fold: star contraction (cap 0) == driver union-find " +
+      "over 3 batches: resolved, labels/ and members/ rows") {
+    val root = graft.pipeline.TempDirs.scoped("graft_ercap_")
+    // batch 1 links an arrival to each standing cluster; batch 2 links
+    // arrivals that BRIDGE standing clusters, so standing members move
+    val batches = Seq(
+      Seq((10L, "cat", 1L), (30L, "dog", 1L), (40L, "aaa", 1L), (60L, "fig", 2L)),
+      Seq((5L, "bat", 1L), (31L, "dot", 1L), (41L, "aab", 1L), (61L, "fog", 2L)),
+      Seq((3L, "bot", 1L), (42L, "aac", 1L), (7L, "fog", 2L), (8L, "fig", 2L)))
+    def run(cap: Long): String = {
+      val dir = s"$root/cap$cap"
+      batches.zipWithIndex.foreach { case (rows, id) =>
+        IncrementalEr.maintainUnder(dir, cap)(cust(rows), id.toLong)
+      }
+      dir
+    }
+    def rows(dir: String, table: String) =
+      spark.read.parquet(s"$dir/$table").collect().map(_.toSeq).toSet
+    val (star, local) = (run(0L), run(graft.operators.LocalGraph.MaxRows))
+    // bot bridges the bat/cat and dog/dot clusters: their members move
+    assert(served(local)(30L) === 3L && served(local)(10L) === 3L)
+    assert(served(star) === served(local))
+    assert(rows(star, "labels") === rows(local, "labels"))
+    assert(rows(star, "members") === rows(local, "members"))
+  }
+
+  test("a maintain whose commit write fails throws, commits nothing and " +
+      "leaves no staged blocks") {
+    val dir = graft.pipeline.TempDirs.scoped("graft_erfail_") + "/er"
+    new java.io.File(dir).mkdirs()
+    // a regular file where the fresh artifact's base/ directory goes
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/base"), Array[Byte](1))
+    val sc = spark.sparkContext
+    sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    val before = sc.getPersistentRDDs.keySet.toSet
+    intercept[Exception] {
+      IncrementalEr.maintainBatch(dir)(
+        cust(Seq((10L, "cat", 1L), (11L, "cot", 1L), (30L, "dog", 1L))), 0L)
+    }
+    assert(IncrementalEr.lastCommitted(spark, dir) === None)
+    assert(sc.getPersistentRDDs.keySet.toSet === before)
+  }
+
   test("bucketOfLong: driver-side pmod(xxhash64(v), m) is bit-identical " +
       "to the column expression (the r17 residue-set fast path)") {
     // adversarial values: negative ids, extremes, small/large — any
@@ -167,20 +210,21 @@ class ErLifecycleSpec extends SparkSpec {
 
   test("a lazy checkpoint keeps its plan's metrics past the job that materializes it") {
     import graft.pipeline.TempDirs
-    // the checkpointed plan itself is unreachable once this returns
-    def checkpointed() = {
-      val df = spark.range(0, 1000, 1, 4).groupBy((col("id") % 7).as("k")).count()
-      val cp = TempDirs.lazyCheckpoint(df)
-      (cp, TempDirs.planMetrics(df).map(new java.lang.ref.WeakReference(_)))
+    TempDirs.staged { st =>
+      // the checkpointed plan itself is unreachable once this returns
+      def checkpointed() = {
+        val df = spark.range(0, 1000, 1, 4).groupBy((col("id") % 7).as("k")).count()
+        val cp = st.checkpoint(df)
+        (cp, TempDirs.planMetrics(df).map(new java.lang.ref.WeakReference(_)))
+      }
+      val (cp, metrics) = checkpointed()
+      // the first job over the checkpoint cuts its lineage; a second job
+      // already running over that lineage still reports these metrics
+      assert(cp.count() === 7)
+      System.gc()
+      val collected = metrics.count(_.get == null)
+      assert(metrics.nonEmpty && collected == 0, s"$collected of ${metrics.size} metrics collected")
     }
-    val (cp, metrics) = checkpointed()
-    // the first job over the checkpoint cuts its lineage; a second job
-    // already running over that lineage still reports these metrics
-    assert(cp.count() === 7)
-    System.gc()
-    val collected = metrics.count(_.get == null)
-    assert(metrics.nonEmpty && collected == 0, s"$collected of ${metrics.size} metrics collected")
-    TempDirs.dropCheckpoint(cp)
   }
 
   test("a maintain + forget cycle loses no task metric updates") {

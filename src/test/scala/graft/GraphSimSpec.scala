@@ -62,7 +62,7 @@ class GraphSimSpec extends SparkSpec {
       (5L, "a b zz yy xx ww vv uu"))
       .toDF("doc_id", "text")
     val got = Dedup.prefixJaccardJoin(docs, "doc_id", "text",
-      n = 3, tNum = 1L, tDen = 2L, persistGrams = false)
+      n = 3, tNum = 1L, tDen = 2L)
       .orderBy("doc_a", "doc_b")
       .as[(Long, Long, Long, Long)].collect()
     // trigram sets: doc1 vs doc2 share 5 of 6 grams -> inter 5, union 7
@@ -95,7 +95,7 @@ class GraphSimSpec extends SparkSpec {
       (1L, "x y z w v"), (2L, "x y z w v"), (3L, "x y z w q"))
       .toDF("doc_id", "text")
     val got = Dedup.prefixJaccardJoin(docs, "doc_id", "text",
-      n = 3, tNum = 1L, tDen = 1L, persistGrams = false)
+      n = 3, tNum = 1L, tDen = 1L)
       .select("doc_a", "doc_b").as[(Long, Long)].collect()
     assert(got.toSeq === Seq((1L, 2L)))
   }

@@ -92,4 +92,24 @@ class LocalGraphSpec extends SparkSpec {
     both(Seq((1L, 2L), (2L, 99L)), Seq(1L, 2L, 3L), iters = 3)
     (1 to 2).foreach { _ => both(randomEdges(30, 45), 1L to 30L, iters = 3) }
   }
+
+  test("bfs, sssp, pagerank: vertices that fill the cap with no edges stay local") {
+    // the takeGraphUnder rule: local iff cap > 0 and |V| + |E| <= cap
+    val vs = Seq(1L, 2L, 3L)
+    def local(df: DataFrame, prefix: String): Map[Any, Long] = {
+      assert(df.inputFiles.exists(_.contains(prefix)), s"$prefix: distributed side ran")
+      rowsOf(df)
+    }
+    val e = Seq.empty[(Long, Long)].toDF("x", "y")
+    def bfs(cap: Long) = Bfs.hopDistances(
+      e, "x", "y", vs.toDF("part"), "part", maxHops = 2, localMaxRows = cap)
+    assert(local(bfs(3L), "graft_bfs_local_") === rowsOf(bfs(0L)))
+    val w = Seq.empty[(Long, Long, Long)].toDF("x", "y", "w")
+    def sssp(cap: Long) = Sssp.boundedDistances(
+      w, "x", "y", "w", vs.toDF("part"), "part", rounds = 2, localMaxRows = cap)
+    assert(local(sssp(3L), "graft_sssp_local_") === rowsOf(sssp(0L)))
+    def pr(cap: Long) = PageRank.fixedPointRanks(Seq.empty[(Long, Long)].toDF("a", "b"),
+      vs.toDF("v"), "v", iterations = 2, localMaxRows = cap)
+    assert(local(pr(3L), "graft_pagerank_local_") === rowsOf(pr(0L)))
+  }
 }
